@@ -17,6 +17,9 @@ def spark():
         extra_conf={"spark.ui.enabled": "false"},
     )
     yield spark
+    from ufuzzy_spark.entry_queries import release_shared
+
+    release_shared(spark)
     spark.stop()
 
 

@@ -1733,19 +1733,18 @@ def test_line_dedup_plan_has_no_cartesian(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_flac_decode_bounds_total_samples():
+def test_flac_decode_bounds_total_samples(monkeypatch):
     """ADVICE r5: CONSTANT subframes / zero-bit escape partitions
     expand ~3000x per frame, so decode_flac refuses streams whose
     frames exceed STREAMINFO's declared total samples (and bounds
     unknown-total streams with a hard max) instead of growing
     unbounded int lists from a crafted crawl payload."""
-    import sys
     from pathlib import Path
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent / "scripts"))
     import numpy as np
     from gen_media_fixture import flac_encode
-    from ufuzzy_spark.multimodal.flac import decode_flac
+    from ufuzzy_spark.multimodal.flac import HARD_MAX, decode_flac
 
     blk = 128
     mono = np.full((2 * blk, 1), -777, dtype=np.int16)
@@ -1767,3 +1766,18 @@ def test_flac_decode_bounds_total_samples():
     payload[18:26] = ((packed & ~0xFFFFFFFFF) | 0).to_bytes(8, "big")
     out = decode_flac(bytes(payload))
     assert out is not None and np.array_equal(out, mono)
+
+    # ADVICE r6: the declared total may only tighten the hard max. A
+    # stream declaring 2^36-1 samples whose CONSTANT frame repeats
+    # past HARD_MAX (frame numbers are not checked) is refused.
+    blk = 65535  # the largest block size STREAMINFO can declare
+    spec = {"assign": "indep", "subs": [("constant",)]}
+    one = flac_encode(8000, np.full((blk, 1), 1234, dtype=np.int16), [spec], blk)
+    head, frame = bytearray(one[:42]), bytes(one[42:])  # fLaC+STREAMINFO | frame
+    packed = int.from_bytes(head[18:26], "big")
+    head[18:26] = (packed | 0xFFFFFFFFF).to_bytes(8, "big")
+    out = decode_flac(bytes(head) + frame * 2)  # overstated total: valid
+    assert out is not None and out.shape == (2 * blk, 1)
+    n_frames = HARD_MAX // blk + 1
+    assert HARD_MAX == 1 << 24 and n_frames * blk > HARD_MAX
+    assert decode_flac(bytes(head) + frame * n_frames) is None

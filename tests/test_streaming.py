@@ -223,7 +223,11 @@ def test_latest_snapshot_tolerates_torn_marker(spark, tmp_path):
 def test_torn_scan_heal_survives_concurrent_unlink(tmp_path, monkeypatch):
     """Two scans racing on the same healed leftover (or a scan racing
     journal_commit's own unlink): the loser's unlink must not raise
-    FileNotFoundError and abort the scan mid-ingest (ADVICE r5)."""
+    FileNotFoundError and abort the scan mid-ingest (ADVICE r5). The
+    same holds when a concurrent commit moves an in-flight record
+    before the scan reads it, and when a concurrent healer migrates a
+    legacy committed record before the scan's own os.replace."""
+    import os
     import pathlib
 
     from ufuzzy_spark.catalog import LocalParquetCatalog
@@ -246,3 +250,36 @@ def test_torn_scan_heal_survives_concurrent_unlink(tmp_path, monkeypatch):
     monkeypatch.setattr(pathlib.Path, "unlink", racing_unlink)
     assert cat.torn_ingests() == []  # pre-fix: FileNotFoundError
     assert not p.exists()
+
+    # journal_commit lands between the scan's glob and its read_text
+    cat.journal_begin("e3")
+    p3 = cat._journal_path("e3")
+    orig_read_text = pathlib.Path.read_text
+    raced = []
+
+    def racing_read_text(self, *args, **kwargs):
+        if self == p3 and not raced:
+            raced.append(self)  # journal_commit reads p3 itself
+            cat.journal_commit("e3")
+        return orig_read_text(self, *args, **kwargs)
+
+    monkeypatch.setattr(pathlib.Path, "read_text", racing_read_text)
+    assert cat.torn_ingests() == []
+    assert cat.journal_status("e3") == "committed"
+
+    # a legacy flat-layout committed record, migrated by a competing
+    # healer between the scan's read_text and its os.replace
+    p4 = cat._journal_path("e4")
+    p4.write_text(json.dumps({"ingest_id": "e4", "status": "committed"}))
+    done4 = cat._journal_done_path("e4")
+    orig_replace = os.replace
+
+    def racing_replace(src, dst):
+        if src == p4 and p4.exists():
+            orig_replace(p4, done4)
+        return orig_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", racing_replace)
+    assert cat.torn_ingests() == []
+    assert done4.exists() and not p4.exists()
+    assert cat.journal_status("e4") == "committed"

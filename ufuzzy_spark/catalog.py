@@ -380,11 +380,16 @@ class LocalParquetCatalog:
                 # may heal the same leftover first (ADVICE r5)
                 p.unlink(missing_ok=True)
                 continue
-            rec = json.loads(p.read_text())
-            if rec["status"] == "committed":
-                # legacy flat layout — migrate so future scans skip it
-                done.parent.mkdir(exist_ok=True)
-                os.replace(p, done)
+            try:
+                rec = json.loads(p.read_text())
+                if rec["status"] == "committed":
+                    # legacy flat layout — migrate so future scans skip it
+                    done.parent.mkdir(exist_ok=True)
+                    os.replace(p, done)
+                    continue
+            except FileNotFoundError:
+                # a concurrent commit or healer moved p after the glob:
+                # it is no longer in flight
                 continue
             out.append(rec["ingest_id"])
         return out

@@ -17,8 +17,10 @@ bucket -> verify -> connected components) are identical.
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,33 +37,59 @@ N_SEEDS = 4          # md5-parity minhash permutations
 STOPWORDS = "the a an and of to in is on for with as by at or".split()
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The driver testdata tables are SINGLE-row-group parquet files, so
-    # the raw scan is one task at every scale factor and every narrow
-    # per-doc expression (normalize/translate, shingle+minhash md5s,
-    # regex scans, repetition metrics) serializes onto one core —
-    # measured as the dominant wall of corpus_funnel (122 s at sf1.0)
-    # and the chain build (57 s). One cheap up-front shuffle of the
-    # pruned columns (~15 MB of text at sf1.0) buys full-width
-    # parallelism for everything downstream — the pipeline.py in_scope
-    # pattern (guide §2.5 "input skew: one huge unsplittable file ...
-    # repartition immediately after the read"). Hash on doc_id keeps
-    # the split deterministic (guide §2.5: never rand()-derived);
-    # width follows defaultParallelism, not a constant, so the same
-    # code is right on a real cluster.
-    n = spark.sparkContext.defaultParallelism * 2
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        n, "doc_id"
-    )
+# Session-resident tables and shared frames. The input tables are
+# SINGLE-row-group parquet files: a raw scan is one task, so every
+# per-doc expression (regexes, shingle md5s, SRP dot products) would
+# run on one core. _table reads a table once per session, hash-
+# partitions it on its key (deterministic; width follows
+# defaultParallelism) and persists it, so each later query is a narrow
+# pass over InMemoryTableScan — uFuzzy's prepared haystack. The
+# md5-parity chain frames (shingles -> minhash -> bands -> cands ->
+# jaccard -> clusters) are shared the same way. Entries are keyed by
+# applicationId, sf_dir and the (st_mtime_ns, st_size) of the source
+# table: the first use after a rewrite unpersists the old copy's
+# frames before rebuilding (else the CacheManager would serve the old
+# cached plan), a new session drops a stopped session's entries, and
+# release_shared() frees them after their last consumer.
+_SHARED: dict = {}
 
 
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same single-row-group issue as _docs: the SRP plane projections
-    # (128 dot products per vector) otherwise run on one core
-    n = spark.sparkContext.defaultParallelism * 2
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        n, "vec_id"
-    )
+def _shared(spark, sf_dir: str, key: str, build, table: str = "documents"):
+    """Build-once-per-session persisted frame; returns (df, n_rows)."""
+    st = os.stat(f"{sf_dir}/{table}.parquet")
+    app = spark.sparkContext.applicationId
+    k = (app, sf_dir, table, (st.st_mtime_ns, st.st_size), key)
+    hit = _SHARED.get(k)
+    if hit is None:
+        _drop(app, lambda o: o[0] != app or (o[1:3] == k[1:3] and o[3] != k[3]))
+        df = build().persist(StorageLevel.MEMORY_AND_DISK)
+        # force NOW: consumers read these frames through concurrent
+        # subplans, and tasks racing an unpopulated persist recompute
+        # the chain (the pipeline.py:100-106 failure mode)
+        hit = _SHARED[k] = (df, df.count())
+    return hit
+
+
+def _drop(app: str, stale) -> None:
+    for k in [k for k in _SHARED if stale(k)]:
+        df, _ = _SHARED.pop(k)
+        if k[0] == app:  # a stopped session's frames went with it
+            df.unpersist()
+
+
+def release_shared(spark: SparkSession, sf_dir: str | None = None) -> None:
+    """Unpersist and drop the resident frames of ``sf_dir`` (or all)."""
+    app = spark.sparkContext.applicationId
+    _drop(app, lambda k: sf_dir is None or k[1] == sf_dir)
+
+
+def _table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
+    """Session-resident ``{sf_dir}/{name}.parquet``, partitioned on ``key``."""
+    def build():
+        n = spark.sparkContext.defaultParallelism * 2
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet").repartition(n, key)
+
+    return _shared(spark, sf_dir, name, build, table=name)[0]
 
 
 def h60(col: Column) -> Column:
@@ -142,7 +170,7 @@ def oracle_sql():
     """,
 )
 def q_normalize_tokens(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     norm = norm_col()
     return d.select(
         "doc_id",
@@ -167,7 +195,7 @@ _MI_RE = _mi_pattern(_NEEDLE)
     """,
 )
 def q_fuzzy_filter(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     return d.where(norm_col().rlike("(?i)" + _MI_RE)).select("doc_id")
 
 
@@ -182,7 +210,7 @@ def q_fuzzy_filter(spark, sf_dir):
 def q_fuzzy_filter_ooo(spark, sf_dir):
     """Out-of-order AND pre-reduction (uFuzzy.mjs:812-828): per-term
     isolation filters, order-invariant — no permutation fan-out."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     return d.where(
         n.rlike("(?i)" + _mi_pattern("join")) & n.rlike("(?i)" + _mi_pattern("spark"))
@@ -199,7 +227,7 @@ def q_fuzzy_filter_ooo(spark, sf_dir):
 )
 def q_negation_filter(spark, sf_dir):
     """Substring negation anti-filter (uFuzzy.mjs:772-790,873-874)."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     return d.where(
         n.rlike("(?i)" + _mi_pattern("data")) & ~n.rlike("(?i)stream")
@@ -243,7 +271,7 @@ def q_rank_comparator(spark, sf_dir):
     compact key structs instead of full documents (ADVICE r2)."""
     from ufuzzy_spark.operators.topk import global_rank_asc
 
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     start = (F.instr(n, "query") - 1).cast("long")
     matched = d.where(F.instr(n, "query") > 0).select(
@@ -277,7 +305,7 @@ def q_typeahead_rank(spark, sf_dir):
     rank_comparator."""
     from ufuzzy_spark.operators.topk import global_rank_asc
 
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     start = (F.instr(n, "stream") - 1).cast("long")
     matched = d.where(F.instr(n, "stream") > 0).select(
@@ -305,7 +333,7 @@ def q_highlight_ranges(spark, sf_dir):
     """Match-range extraction for highlight rendering
     (uFuzzy.mjs:681-737,1012-1031): [start, end) of the first
     occurrence per doc."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     start = (F.instr(n, "window") - 1).cast("long")
     return d.where(F.instr(n, "window") > 0).select(
@@ -341,7 +369,7 @@ def q_intra_rules_ladder(spark, sf_dir):
     ladder (uFuzzy.mjs:175-218, intraMode=1 defaults): digits exact;
     len<=2 exact; len 3 -> 1 trn; len 4 -> 1 trn + 1 ins; len>=5 ->
     full budgets."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     toks = (
         d.select(F.explode(tokens_expr(norm_col())).alias("term")).distinct()
     )
@@ -397,7 +425,7 @@ def q_permute_fanout(spark, sf_dir):
     Heap's-algorithm order (:986-1010). One scan pass: the per-doc
     match set is computed as an array of per-permutation hits and
     exploded — no N-pass union, no extra shuffle."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     hits = F.array(
         *[
@@ -433,7 +461,7 @@ def q_quoted_exact(spark, sf_dir):
     Contraction detachment (:258-262) shares this code path and is
     differential-tested (tests/test_oracle.py); driver documents
     contain no apostrophes, so its driver probe would be vacuous."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     return d.where(n.rlike("(?i)" + _QUOTED_RE)).select(
         "doc_id",
@@ -493,7 +521,7 @@ _REFINE_RE_SQL = _REFINE_RE.replace("'", "''")
     """,
 )
 def q_refine_match_probe(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     term = _REFINE_TERM
     tlen = len(term)
     n = norm_col()
@@ -575,7 +603,7 @@ def q_single_error(spark, sf_dir):
     Computed LIVE here with the compiled pattern (Java regex handles
     the lookaheads); the DuckDB side replays the oracle-precomputed
     expected set."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     hits = F.array(
         *[
@@ -602,7 +630,7 @@ def q_single_error(spark, sf_dir):
     """,
 )
 def q_exact_dedup(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     w = Window.partitionBy(F.md5("text"))
     return d.select("doc_id", F.min("doc_id").over(w).alias("rep_id"))
 
@@ -610,38 +638,6 @@ def q_exact_dedup(spark, sf_dir):
 # ---------------------------------------------------------------- #
 # 5. minhash signatures (md5-parity family; SURVEY §2 #13 analog)
 # ---------------------------------------------------------------- #
-
-# Session-scoped shared chain frames (OPTIMIZATION_r06; VERDICT r5
-# next #2). The md5-parity chain (shingles -> minhash -> bands ->
-# cands -> jaccard -> clusters) feeds seven queries; before r06 each
-# consumer rebuilt it from the raw scan, so the suite recomputed the
-# chain ~7x (and the chain's joins dominated the sf1.0 wall: 19.5M
-# candidate pairs). Frames are persisted ONCE per (applicationId,
-# sf_dir) and reused. This is NOT cross-run caching: the memo key is
-# the live Spark applicationId, nothing is written outside the
-# session, and every fresh bench/oracle process recomputes everything
-# from the parquet inputs — the persist just stops one session from
-# re-deriving the identical frame per consumer (guide §5 "caching is
-# worth it when a DataFrame is reused").
-_SHARED: dict = {}
-
-
-def _shared(spark, sf_dir: str, key: str, builder):
-    """Build-once-per-session persisted frame; returns (df, n_rows)."""
-    from pyspark import StorageLevel
-
-    k = (spark.sparkContext.applicationId, sf_dir, key)
-    hit = _SHARED.get(k)
-    if hit is None:
-        df = builder().persist(StorageLevel.MEMORY_AND_DISK)
-        # force NOW: consumers read these frames through concurrent
-        # subplans, and tasks racing an unpopulated persist recompute
-        # the chain (the pipeline.py:100-106 failure mode)
-        n = df.count()
-        hit = (df, n)
-        _SHARED[k] = hit
-    return hit
-
 
 # Guarded broadcast (the incremental.py `_maybe_broadcast` rule: never
 # bare-broadcast a data-dependent frame). Per-doc profile frames are
@@ -677,7 +673,7 @@ def _sharr(spark, sf_dir):
 
     def build():
         return (
-            _docs(spark, sf_dir)
+            _table(spark, sf_dir, "documents", "doc_id")
             .select("doc_id", norm_col().alias("norm"))
             .select("doc_id", F.expr(_SH_EXPR).alias("sh"))
         )
@@ -1000,7 +996,8 @@ def q_verify_pairs_native(spark, sf_dir):
     containment — JVM codegen end-to-end. The pandas-UDF verifier in
     operators/verify.py covers the fuzzy configs."""
     cands, _ = _cands(spark, sf_dir)
-    d = _docs(spark, sf_dir).select("doc_id", norm_col().alias("norm"))
+    d = _table(spark, sf_dir, "documents", "doc_id")
+    d = d.select("doc_id", norm_col().alias("norm"))
 
     # per-doc profile: distinct window terms as an array + the scan
     # window. The pre-r06 shape exploded terms, joined cands twice per
@@ -1097,7 +1094,8 @@ def q_exact_substring_pairs(spark, sf_dir):
     # shuffles the gram rows ONCE (collect_set dedups in-group, so the
     # pre-join distinct is free), then only the skinny pairs flow to
     # the final distinct (guide §2.3/§2.4).
-    d = _docs(spark, sf_dir).select("doc_id", norm_col().alias("norm"))
+    d = _table(spark, sf_dir, "documents", "doc_id")
+    d = d.select("doc_id", norm_col().alias("norm"))
     grams = d.where(F.length("norm") >= _SUBSTR_K).select(
         "doc_id",
         F.explode(
@@ -1164,7 +1162,7 @@ def q_suffix_array_pairs(spark, sf_dir):
     (operators/substring.py)."""
     from ufuzzy_spark.operators.suffix_array import suffix_array_pairs
 
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     # zero-padded string ids: the operator's url ordering (string) must
     # agree with the oracle's numeric doc_id < doc_id pair orientation
     uid = F.format_string("%09d", "doc_id")
@@ -1252,7 +1250,7 @@ def _clusters(spark, sf_dir):
 
         near, _ = _near_dup_edges(spark, sf_dir)
         near_edges = near.select("id_a", "id_b")
-        d = _docs(spark, sf_dir)
+        d = _table(spark, sf_dir, "documents", "doc_id")
         # star-edge election (VERDICT r5 next #1): the old md5
         # self-join emitted K(K-1)/2 clique edges per identical-text
         # group — quadratic poison for boilerplate mega-groups at
@@ -1381,7 +1379,7 @@ def q_pair_features(spark, sf_dir):
     cands = cands_df.select(
         F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b")
     )
-    normed = _docs(spark, sf_dir).select(
+    normed = _table(spark, sf_dir, "documents", "doc_id").select(
         F.col("doc_id").alias("url"), norm_col().alias("norm_text")
     )
     # broadcast the per-doc window texts (guarded): the pair table is
@@ -1509,7 +1507,7 @@ _SIMHASH_SQL = f"""
 
 @register("simhash_fingerprint", _SIMHASH_SQL)
 def q_simhash_fingerprint(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     toks = d.select(
         "doc_id", F.explode(tokens_expr(norm_col())).alias("tok")
     )
@@ -1579,7 +1577,7 @@ def q_lang_id(spark, sf_dir):
     regex but ASCII-only in DuckDB's RE2, so boundary-regex counting
     is only data-dependently portable (ADVICE r1) — exact-token
     membership against the shared tokenizer is engine-identical."""
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     toks = tokens_expr(n)
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
@@ -1614,7 +1612,7 @@ def q_lang_id(spark, sf_dir):
     """,
 )
 def q_quality_score(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n_chars = F.length("text").cast("long")
     n_tokens = F.size(tokens_expr(norm_col())).cast("long")
     n_punct = F.size(
@@ -1651,7 +1649,7 @@ def q_quality_score(spark, sf_dir):
     """,
 )
 def q_token_count(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     return d.select(
         "doc_id",
         F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0)))
@@ -1677,7 +1675,7 @@ def q_token_count(spark, sf_dir):
     """,
 )
 def q_doc_fingerprint(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     return d.select("doc_id", F.md5(n).alias("fp_md5"), h60(n).alias("fp60"))
 
@@ -1722,7 +1720,8 @@ def q_decontaminate(spark, sf_dir):
     (operators/decontaminate.py)."""
     from ufuzzy_spark.operators.decontaminate import ngram_overlap
 
-    d = _docs(spark, sf_dir).withColumn("tokens", tokens_expr(norm_col()))
+    d = _table(spark, sf_dir, "documents", "doc_id")
+    d = d.withColumn("tokens", tokens_expr(norm_col()))
     bench = d.where(F.col("doc_id") % 50 == 0)
     train = d.where(F.col("doc_id") % 50 != 0)
     # raw-string grams so the DuckDB twin is join-identical; the
@@ -1753,7 +1752,7 @@ def q_stratified_sample(spark, sf_dir):
     (operators/sampling.py)."""
     from ufuzzy_spark.operators.sampling import stratified_sample
 
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
+    d = _table(spark, sf_dir, "documents", "doc_id").select("doc_id", "lang")
     return stratified_sample(d, _MIX_RATES, "lang", "doc_id")
 
 
@@ -1791,7 +1790,8 @@ def q_repetition_score(spark, sf_dir):
     no shuffle, no Python (operators/textstats.py)."""
     from ufuzzy_spark.operators.textstats import repetition_metrics
 
-    d = _docs(spark, sf_dir).withColumn("tokens", tokens_expr(norm_col()))
+    d = _table(spark, sf_dir, "documents", "doc_id")
+    d = d.withColumn("tokens", tokens_expr(norm_col()))
     return repetition_metrics(d)
 
 
@@ -1856,7 +1856,7 @@ def q_line_dedup(spark, sf_dir):
     # lesson): the chunking lambda slices its tokens argument per
     # element, and a non-attribute argument is re-evaluated on every
     # element — the inline form re-ran translate+split per chunk
-    toked = _docs(spark, sf_dir).select(
+    toked = _table(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", tokens_expr(norm_col()).alias("toks")
     )
     t = F.col("toks")
@@ -1927,7 +1927,7 @@ def q_pii_scrub(spark, sf_dir):
     three scrub classes and the no-op path are exercised."""
     from ufuzzy_spark.operators.pii import scrub_pii
 
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     m = F.col("doc_id") % 4
     did = F.col("doc_id").cast("string")
     tail = (
@@ -2029,7 +2029,7 @@ def q_url_canonicalize(spark, sf_dir):
     non-URL pass-through."""
     from ufuzzy_spark.operators.urlnorm import canonicalize_urls
 
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     did = F.col("doc_id").cast("string")
     k = (F.col("doc_id") % 7).cast("string")
     m = F.col("doc_id") % 5
@@ -2143,7 +2143,7 @@ def q_corpus_funnel(spark, sf_dir):
     plus the cluster join — no per-stage passes."""
     from ufuzzy_spark.operators.textstats import dup_ngram_frac
 
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
     n = norm_col()
     t = tokens_expr(n)
     # two-step projection ON PURPOSE: dup_ngram_frac's transform lambda
@@ -2471,7 +2471,7 @@ _ANN_SQL = f"""
 
 @register("ann_cosine_topk", _ANN_SQL)
 def q_ann_cosine_topk(spark, sf_dir):
-    e = _embs(spark, sf_dir)
+    e = _table(spark, sf_dir, "embeddings", "vec_id")
     qs = e.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
@@ -2619,7 +2619,7 @@ def q_ann_srp_topk(spark, sf_dir):
     via two-phase top-k."""
     from ufuzzy_spark.operators.topk import grouped_topk
 
-    e = _embs(spark, sf_dir)
+    e = _table(spark, sf_dir, "embeddings", "vec_id")
     buckets = _srp_buckets_df(spark, e)
     qb = buckets.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), "bkt"
@@ -2740,7 +2740,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     every crossJoin broadcasts the K-row codebook."""
     from ufuzzy_spark.operators.topk import grouped_topk
 
-    e = _embs(spark, sf_dir)
+    e = _table(spark, sf_dir, "embeddings", "vec_id")
 
     from ufuzzy_spark.operators.ann import cosine_col as cos
 
@@ -2824,7 +2824,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     """,
 )
 def q_embedding_stats(spark, sf_dir):
-    e = _embs(spark, sf_dir)
+    e = _table(spark, sf_dir, "embeddings", "vec_id")
     norm = F.sqrt(
         F.aggregate(
             F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
@@ -2902,7 +2902,7 @@ def q_embedding_near_dup(spark, sf_dir):
     keys; the all-pairs cosine exists only inside a bucket."""
     from ufuzzy_spark.operators.components import connected_components
 
-    e = _embs(spark, sf_dir)
+    e = _table(spark, sf_dir, "embeddings", "vec_id")
     buckets = _srp_buckets_df(spark, e)
     cand = (
         buckets.select(F.col("vec_id").alias("ia"), "bkt")
@@ -3099,7 +3099,7 @@ def q_incremental_ingest(spark, sf_dir):
     from ufuzzy_spark.pipeline import run_pipeline
     from ufuzzy_spark.streaming.incremental import incremental_dedup
 
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents", "doc_id")
 
     def page_cols(url_prefix, text_col):
         return [

@@ -57,6 +57,9 @@ _RATES = {
 
 _SAMPLE_BITS = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
+# per-channel decoded-sample ceiling, whatever STREAMINFO declares
+HARD_MAX = 1 << 24
+
 
 class _Corrupt(Exception):
     pass
@@ -257,10 +260,11 @@ def decode_flac(payload: bytes) -> np.ndarray | None:
         # tiny crafted payload (the input domain is web-crawl bytes)
         # could otherwise exhaust executor memory in these int lists.
         # A valid stream never exceeds STREAMINFO's total-samples
-        # declaration; when that field is 0 (unknown/streaming), fall
-        # back to a hard per-channel max (~16.7M samples ≈ 6 min of
-        # 44.1 kHz — far above any fixture, far below heap danger).
-        max_samples = st_total if st_total else (1 << 24)
+        # declaration, but that field is attacker-declared (up to
+        # 2^36-1), so it only ever tightens the hard per-channel max
+        # (~16.7M samples ≈ 6 min of 44.1 kHz — far above any
+        # fixture, far below heap danger); 0 means unknown/streaming.
+        max_samples = min(st_total or HARD_MAX, HARD_MAX)
 
         channels: list[list[int]] = [[] for _ in range(st_ch)]
         while i < len(p):
