@@ -201,34 +201,24 @@ def test_multimodal_decode_schema_and_determinism(spark):
     )
 
 
-def test_verify_batch_parity_with_loop():
-    """The UFZ_VERIFY_BATCH=1 alternate path (pairdup.verify_batch,
-    kept in-tree after the round-3 A/B measured it slower) must stay
-    result-identical to the per-pair loop — in the default literal
-    config AND an intraMode=1 config that exercises the per-miss
-    fuzzy regex fallback."""
-    from fixtures.gen import gen_corpus
-    from ufuzzy_spark.config import MatchConfig, PipelineConfig
-    from ufuzzy_spark.pairdup import PairVerifier, normalize_text
+def test_verify_pairs_survives_literal_placeholder(spark):
+    """Page text may hold the oracle's quoted-span placeholder
+    (oracle.EXACT_HERE) as a plain word: the verify and pair_features
+    jobs must return that pair's row instead of failing the job."""
+    from ufuzzy_spark.operators.pair_features import pair_features
+    from ufuzzy_spark.operators.verify import verify_pairs
+    from ufuzzy_spark.oracle import EXACT_HERE
 
-    pages, _ = gen_corpus(120, seed=23, label_pairs=False)
-    texts = [normalize_text(p["text"]) for p in pages]
-    a_list = [texts[i] for i in range(0, 100)]
-    b_list = (
-        [texts[i + 1] for i in range(0, 99)] + [a_list[99]]  # one exact pair
-        + []
+    normed = spark.createDataFrame(
+        [("a", f"{EXACT_HERE} alpha beta gamma"), ("b", "alpha beta gamma delta")],
+        ["url", "norm_text"],
     )
-    a_list += ["", "only one side empty"]
-    b_list += ["nonempty", ""]
-
-    for pcfg in (
-        PipelineConfig(),
-        PipelineConfig(match=MatchConfig(intraMode=1)),
-    ):
-        v = PairVerifier(pcfg)
-        loop = [v.verify(a, b) for a, b in zip(a_list, b_list)]
-        batch = v.verify_batch(a_list, b_list)
-        assert loop == batch, pcfg
+    pairs = spark.createDataFrame([("a", "b")], ["url_a", "url_b"])
+    rows = verify_pairs(pairs, normed).collect()
+    assert [(r.terms_a, r.matched_a, r.terms_b, r.matched_b) for r in rows] == [
+        (4, 3, 4, 3)
+    ]
+    assert len(pair_features(pairs, normed).collect()) == 1
 
 
 def test_parse_media_header_real_formats():

@@ -12,6 +12,7 @@ import pytest
 from ufuzzy_spark.config import MatchConfig
 from ufuzzy_spark.latinize import latinize
 from ufuzzy_spark.oracle import (
+    EXACT_HERE,
     UFuzzyOracle,
     highlight,
     permute,
@@ -31,6 +32,9 @@ def uf():
 def test_split_basic(uf):
     assert uf.split("feed cat") == ["feed", "cat"]
     assert uf.split("  Feed,   the.CAT!! ") == ["feed", "the", "cat"]
+    # the reference's \d (JS, like Java's and RE2's) is [0-9]: other
+    # Unicode digits are split characters, not term characters
+    assert uf.split("abc \u0661\u0662\u0663 x") == ["abc", "x"]
 
 
 def test_split_keepcase_camel(uf):
@@ -42,6 +46,12 @@ def test_split_keepcase_camel(uf):
 def test_split_quoted_exact(uf):
     # quoted phrases survive verbatim (uFuzzy.mjs:169,229-234)
     assert uf.split('match "C++" here') == ["match", '"C++"', "here"]
+    # the stash placeholder (uFuzzy.mjs:11) written in the text itself
+    # is an ordinary word once the quoted spans are used up
+    assert uf.split(f"{EXACT_HERE} alpha") == [EXACT_HERE, "alpha"]
+    assert sorted(uf.split(f'{EXACT_HERE} "q" z')) == sorted(
+        [EXACT_HERE, '"q"', "z"]
+    )
 
 
 def test_split_empty_nonsearchable(uf):
@@ -272,6 +282,25 @@ def test_permute_sorted_is_lexicographic():
     out = permute_sorted(["a", "b", "c"])
     assert out[0] == ["a", "b", "c"]
     assert out == sorted(out)
+
+
+# -- PairVerifier terms (pairdup.py) --------------------------------- #
+
+def test_window_terms_keep_quoted_spans():
+    # split() stashes a "..." span as one term before splitting on
+    # interSplit, so batch_dedup's predicate sees '"8"', not '8'
+    from ufuzzy_spark.pairdup import PairVerifier
+
+    assert '"8"' in PairVerifier().window_terms('x{shard="8"} y')
+
+
+def test_pair_verifier_literal_placeholder():
+    from ufuzzy_spark.pairdup import PairFeatures, PairVerifier
+
+    got = PairVerifier().verify(
+        f"{EXACT_HERE} alpha beta gamma", "alpha beta gamma delta"
+    )
+    assert got == PairFeatures(0.75, False, 4, 4, 3, 3, False)
 
 
 # -- highlight (uFuzzy.mjs:1012-1031) -------------------------------- #

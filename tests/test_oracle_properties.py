@@ -7,7 +7,7 @@ from hypothesis import strategies as st
 
 from ufuzzy_spark.config import MatchConfig, PipelineConfig
 from ufuzzy_spark.oracle import UFuzzyOracle, permute, permute_sorted
-from ufuzzy_spark.pairdup import PairVerifier, normalize_text
+from ufuzzy_spark.pairdup import PairFeatures, PairVerifier, normalize_text
 
 WORD = st.text(alphabet=string.ascii_lowercase, min_size=5, max_size=10)
 WORDS = st.lists(WORD, min_size=3, max_size=12)
@@ -28,6 +28,7 @@ DISTINCT_WORDS = st.lists(DISTINCT_WORD, min_size=3, max_size=10)
 _uf1 = UFuzzyOracle(MatchConfig(intraMode=1))
 _uf0 = UFuzzyOracle(MatchConfig())
 _pv = PairVerifier(PipelineConfig())
+_pv1 = PairVerifier(PipelineConfig(match=MatchConfig(intraMode=1)))
 
 
 @given(DISTINCT_WORDS, st.integers(0, 1000))
@@ -83,8 +84,13 @@ def test_filter_subset_of_haystack_and_stable_order(words, seed):
 def test_pair_verifier_symmetric_and_reflexive(words):
     a = normalize_text(" ".join(words))
     b = normalize_text(" ".join(reversed(words)))
-    assert _pv.verify(a, a).is_dup
-    assert _pv.verify(a, b).score == _pv.verify(b, a).score
+    for pv in (_pv, _pv1):  # literal scan; intraMode=1 regex fallback
+        n = len(pv.window_terms(a))
+        assert pv.verify(a, a) == PairFeatures(1.0, True, n, n, n, n, True)
+        assert pv.verify(a, b).score == pv.verify(b, a).score
+        # an empty side has no terms to match: never a dup
+        assert pv.verify(a, "") == PairFeatures(0.0, False, n, 0, 0, 0, False)
+        assert pv.verify("", a) == PairFeatures(0.0, False, 0, n, 0, 0, False)
 
 
 @given(WORDS)

@@ -993,8 +993,10 @@ def q_verify_pairs_native(spark, sf_dir):
     """The default-config pair predicate in NATIVE exprs (no UDF):
     with intraMode=0/intraIns=0 each split term compiles to a literal
     (uFuzzy.mjs:342-359), so verification is θ-fraction substring
-    containment — JVM codegen end-to-end. The pandas-UDF verifier in
-    operators/verify.py covers the fuzzy configs."""
+    containment — JVM codegen end-to-end. Terms come from a plain
+    split, so this is not the pipeline's predicate: the pandas-UDF
+    verifier in operators/verify.py (the one used for every config)
+    keeps split()'s quoted "..." spans as terms."""
     cands, _ = _cands(spark, sf_dir)
     d = _table(spark, sf_dir, "documents", "doc_id")
     d = d.select("doc_id", norm_col().alias("norm"))

@@ -31,7 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ufuzzy_spark.config import MatchConfig, PipelineConfig
+from ufuzzy_spark.config import PipelineConfig
+from ufuzzy_spark.operators.verify import _attach_windows, _get_verifier, _pcfg_tuple
 
 PAIR_FEATURES_SCHEMA = StructType(
     [
@@ -53,12 +54,8 @@ PAIR_FEATURES_SCHEMA = StructType(
 
 _EMPTY = (False, 0, -1, 0, 0, 0, 0, 0, 0, 0, 0, 0, [])
 
-_ORACLES: dict = {}
-
 
 def _features_for(oracle, needle_terms, norm_a, norm_b, window):
-    from ufuzzy_spark.oracle import UFuzzyOracle  # noqa: F401 (executor import)
-
     hay = [norm_b[: 2 * window]]
 
     # per-term AND pre-reduction before building the in-order needle —
@@ -106,20 +103,13 @@ def _features_for(oracle, needle_terms, norm_a, norm_b, window):
 
 
 def make_pair_features_udf(pcfg: PipelineConfig, needle_terms: int = 5):
-    from dataclasses import asdict
-
-    match_kw = asdict(pcfg.match)
-    match_kw["intraSlice"] = tuple(match_kw["intraSlice"])
-    key = tuple(sorted(match_kw.items()))
+    key = _pcfg_tuple(pcfg)
     window = pcfg.verify_window_chars
 
     @F.pandas_udf(PAIR_FEATURES_SCHEMA)
     def pair_features_udf(norm_a: pd.Series, norm_b: pd.Series) -> pd.DataFrame:
-        from ufuzzy_spark.oracle import UFuzzyOracle
-
-        if key not in _ORACLES:
-            _ORACLES[key] = UFuzzyOracle(MatchConfig(**dict(key)))
-        oracle = _ORACLES[key]
+        # the verify stage's per-executor compile-once cache
+        oracle = _get_verifier(key).oracle
         rows = [
             _features_for(
                 oracle,
@@ -145,6 +135,8 @@ def pair_features(
 ) -> DataFrame:
     """(url_a, url_b) x normed -> full Info-counter features per pair.
 
+    The windows are attached exactly as ``verify_pairs`` attaches them.
+
     ``broadcast_texts``: callers that KNOW the corpus side is small
     (e.g. the entry queries, where the pair table is orders of
     magnitude larger than the doc table) can broadcast the window
@@ -153,26 +145,7 @@ def pair_features(
     callers must opt in deliberately.
     """
     pcfg = pcfg or PipelineConfig()
-    win = 2 * pcfg.verify_window_chars
-    texts = normed.select(
-        "url", F.substring("norm_text", 1, win).alias("norm_win")
-    )
-    if broadcast_texts:
-        texts = F.broadcast(texts)
-    joined = (
-        pairs.join(
-            texts.select(
-                F.col("url").alias("url_a"), F.col("norm_win").alias("norm_a")
-            ),
-            "url_a",
-        )
-        .join(
-            texts.select(
-                F.col("url").alias("url_b"), F.col("norm_win").alias("norm_b")
-            ),
-            "url_b",
-        )
-    )
+    joined = _attach_windows(pairs, normed, pcfg, broadcast_texts)
     fu = make_pair_features_udf(pcfg, needle_terms)
     return joined.withColumn("f", fu("norm_a", "norm_b")).select(
         "url_a", "url_b", "f.*"

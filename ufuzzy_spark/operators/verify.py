@@ -41,7 +41,8 @@ VERIFY_SCHEMA = StructType(
     ]
 )
 
-# per-executor verifier cache keyed by config hash (compile-once)
+# per-executor verifier cache keyed by config hash (compile-once);
+# the pair_features UDF takes its oracle from here too
 _VERIFIERS: dict = {}
 
 
@@ -66,24 +67,16 @@ def _pcfg_tuple(pcfg: PipelineConfig):
 
 
 def make_verify_udf(pcfg: PipelineConfig):
-    import os
-
     key = _pcfg_tuple(pcfg)
-    # A/B switch for the batch-level vectorized fast path (VERDICT r2
-    # #3); captured driver-side into the closure so both paths ship
-    # identical configs. Decision + measurement: BENCH/BASELINE.md.
-    use_batch = os.environ.get("UFZ_VERIFY_BATCH", "0") == "1"
 
     @F.pandas_udf(VERIFY_SCHEMA)
     def verify_udf(norm_a: pd.Series, norm_b: pd.Series) -> pd.DataFrame:
-        v = _get_verifier(key)
-        a_clean = [a if isinstance(a, str) else "" for a in norm_a]
-        b_clean = [b if isinstance(b, str) else "" for b in norm_b]
-        if use_batch:
-            rows = v.verify_batch(a_clean, b_clean)
-        else:
-            verify = v.verify  # bind once; the batch loop is the hot path
-            rows = [verify(a, b) for a, b in zip(a_clean, b_clean)]
+        # bind once; the batch loop is the hot path
+        verify = _get_verifier(key).verify
+        rows = [
+            verify(a if isinstance(a, str) else "", b if isinstance(b, str) else "")
+            for a, b in zip(norm_a, norm_b)
+        ]
         cols = list(zip(*((r.score, r.is_dup, r.terms_a, r.terms_b,
                            r.matched_a, r.matched_b, r.exact) for r in rows)))
         if not cols:
@@ -92,6 +85,38 @@ def make_verify_udf(pcfg: PipelineConfig):
         return pd.DataFrame(dict(zip(names, cols)))
 
     return verify_udf
+
+
+# Largest text side (rows) a caller may broadcast into the window
+# attach: each row carries a ~1 KB window (2 x verify_window_chars).
+WINDOW_BCAST_MAX_ROWS = 500_000
+
+
+def _attach_windows(
+    pairs: DataFrame, normed: DataFrame, pcfg: PipelineConfig, broadcast_texts: bool
+) -> DataFrame:
+    """pairs + norm_a/norm_b: each side's first 2 x verify_window_chars
+    of norm_text, attached by two equi-joins on url_a, then url_b.
+
+    Only the window is shuffled, never the full document. With
+    ``broadcast_texts`` the window table is broadcast, so the (much
+    larger) pair table is not shuffled twice by the attach joins.
+    """
+    win = 2 * pcfg.verify_window_chars
+    texts = normed.select(
+        "url", F.substring("norm_text", 1, win).alias("norm_win")
+    )
+    if broadcast_texts:
+        texts = F.broadcast(texts)
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            texts.select(
+                F.col("url").alias(f"url_{side}"),
+                F.col("norm_win").alias(f"norm_{side}"),
+            ),
+            f"url_{side}",
+        )
+    return pairs
 
 
 def verify_pairs(
@@ -110,36 +135,13 @@ def verify_pairs(
     so the two attach joins otherwise shuffle the pair table twice —
     by url_a, then again by url_b (guide §8: the attach join sneaks
     the payload shuffle back in). Callers that have COUNTED the text
-    side and know it is small opt in; the windows are ~1 KB/row, so
-    the guard threshold lives with each caller (run_pipeline /
-    incremental use <= 500k rows). Off by default: ``normed`` is
-    data-dependent and a bare broadcast of an unbounded frame is the
-    incremental.py `_maybe_broadcast` anti-pattern.
+    side opt in when it is at most ``WINDOW_BCAST_MAX_ROWS`` rows.
+    Off by default: ``normed`` is data-dependent and a bare broadcast
+    of an unbounded frame is the incremental.py `_maybe_broadcast`
+    anti-pattern.
     """
     pcfg = pcfg or PipelineConfig()
-    # ship only the verification window through the shuffle
-    win = 2 * pcfg.verify_window_chars
-    texts = normed.select(
-        "url", F.substring("norm_text", 1, win).alias("norm_win")
-    )
-    if broadcast_texts:
-        texts = F.broadcast(texts)
-
-    joined = (
-        pairs.join(
-            texts.select(
-                F.col("url").alias("url_a"), F.col("norm_win").alias("norm_a")
-            ),
-            "url_a",
-        )
-        .join(
-            texts.select(
-                F.col("url").alias("url_b"), F.col("norm_win").alias("norm_b")
-            ),
-            "url_b",
-        )
-    )
-
+    joined = _attach_windows(pairs, normed, pcfg, broadcast_texts)
     vu = make_verify_udf(pcfg)
     # passthrough: any extra columns on `pairs` (e.g. the incremental
     # path's hash_lo/hash_hi) ride through, so callers don't pay a

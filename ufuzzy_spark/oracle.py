@@ -248,11 +248,12 @@ class UFuzzyOracle:
             r"(?:\s+|^)-(?:%s+|%s)" % (intra_chars, QUOTED_ANY), re.I
         )
 
-        # uFuzzy.mjs:220-226
+        # uFuzzy.mjs:220-226. re.ASCII: JS \d (like Java's and RE2's)
+        # is [0-9]; Python's would also match e.g. Arabic-Indic digits
         self.with_intra_split = bool(intra_split)
-        self.intra_split_re = re.compile(intra_split)
-        self.inter_split_re = re.compile(inter_split)
-        self.trim_re = re.compile("^%s|%s$" % (inter_split, inter_split))
+        self.intra_split_re = re.compile(intra_split, re.ASCII)
+        self.inter_split_re = re.compile(inter_split, re.ASCII)
+        self.trim_re = re.compile("^%s|%s$" % (inter_split, inter_split), re.ASCII)
         self.contrs_re = _compile_js(intra_contr, re.I)
 
         # uFuzzy.mjs:420-423
@@ -260,7 +261,7 @@ class UFuzzyOracle:
         self.inter_bound_re = re.compile(inter_bound)
         self.intra_bound_re = re.compile(intra_bound)
 
-        self._num_or_alpha_re = re.compile(r"[^\d]+|\d+")  # uFuzzy.mjs:248
+        self._num_or_alpha_re = re.compile(r"[^\d]+|\d+", re.ASCII)  # uFuzzy.mjs:248
         # bounded compile cache: PairVerifier/pair_features call
         # prep_query once per distinct corpus term, so an unbounded
         # dict grows for the executor's lifetime on large vocabularies
@@ -302,10 +303,10 @@ class UFuzzyOracle:
         for t in self.inter_split_re.split(needle):
             if t == "":
                 continue
-            if t == EXACT_HERE:
+            if t == EXACT_HERE and j < len(exacts):
                 out.append(exacts[j])
                 j += 1
-            else:
+            else:  # a placeholder past the stash is the text's own word
                 out.append(t)
         return out
 

@@ -137,83 +137,3 @@ class PairVerifier:
     def is_dup(self, text_a: str, text_b: str) -> bool:
         """Raw-text convenience (normalizes first)."""
         return self.verify(normalize_text(text_a), normalize_text(text_b)).is_dup
-
-    def verify_batch(self, a_list, b_list) -> list[PairFeatures]:
-        """Batch verification — same results as [verify(a, b) ...].
-
-        Batch-level vectorization of the literal fast path (VERDICT r2
-        #3): tasks are grouped by TERM across the whole Arrow batch,
-        then each unique term runs one pandas ``str.contains(regex=
-        False)`` pass over an object-array fancy-index of its
-        haystacks — the C memmem calls are identical to the per-pair
-        loop but dispatched from pandas' C string loop instead of
-        Python bytecode. The fuzzy regex fallback (non-default
-        configs) stays per-miss.
-
-        MEASURED AS A 4.1x PESSIMIZATION (0.242x) by the stage-level
-        A/B on the 300k corpus (scripts/verify_ab.py; table in
-        BENCH/BASELINE.md "Round-3 A/B") — same root cause as the
-        round-2 prefilter revert: true-dup pairs early-exit the
-        per-pair C scan at small offsets, while per-term grouped
-        passes always scan full haystacks. Kept behind
-        UFZ_VERIFY_BATCH=1 (default off) with a parity test.
-        """
-        import numpy as np
-        import pandas as pd
-
-        n = len(a_list)
-        out: list[PairFeatures | None] = [None] * n
-        w2 = 2 * self.window
-
-        # per-pair term tuples + task lists (term -> rows/sides)
-        tasks: dict[str, list[int]] = {}  # term -> packed row*2+side
-        meta = []  # (row, n_a, n_b) for non-exact, non-empty pairs
-        hay_b = np.empty(n, dtype=object)
-        hay_a = np.empty(n, dtype=object)
-        for i in range(n):
-            a, b = a_list[i], b_list[i]
-            if a == b:
-                k = len(self.window_terms(a))
-                out[i] = PairFeatures(1.0, True, k, k, k, k, True)
-                continue
-            terms_a = self.window_terms(a)
-            terms_b = self.window_terms(b)
-            if not terms_a or not terms_b:
-                out[i] = PairFeatures(
-                    0.0, False, len(terms_a), len(terms_b), 0, 0, False
-                )
-                continue
-            hay_b[i] = b[:w2]
-            hay_a[i] = a[:w2]
-            meta.append((i, len(terms_a), len(terms_b)))
-            for t in terms_a:
-                tasks.setdefault(t, []).append(i * 2)
-            for t in terms_b:
-                tasks.setdefault(t, []).append(i * 2 + 1)
-
-        matched = np.zeros((n, 2), dtype=np.int64)
-        for term, packed in tasks.items():
-            p = np.asarray(packed, dtype=np.int64)
-            rows, sides = p >> 1, p & 1
-            hays = np.where(sides == 0, hay_b[rows], hay_a[rows])
-            hit = (
-                pd.Series(hays)
-                .str.contains(term, regex=False)
-                .to_numpy(dtype=bool)
-            )
-            if self._fuzzy_fallback and not hit.all():
-                rx = self._term_re(term)
-                if rx is not None:
-                    miss = np.flatnonzero(~hit)
-                    for mi in miss:
-                        if rx.search(hays[mi]):
-                            hit[mi] = True
-            np.add.at(matched, (rows, sides), hit)
-
-        for i, n_a, n_b in meta:
-            m_a, m_b = int(matched[i, 0]), int(matched[i, 1])
-            score = 0.5 * (m_a / n_a + m_b / n_b)
-            out[i] = PairFeatures(
-                score, score >= self.theta, n_a, n_b, m_a, m_b, False
-            )
-        return out

@@ -30,7 +30,7 @@ from ufuzzy_spark.operators.dedup import exact_dedup
 from ufuzzy_spark.operators.lsh import candidate_pairs, postings_from_band_hashes
 from ufuzzy_spark.operators.minhash import banded_signatures
 from ufuzzy_spark.operators.normalize import normalize
-from ufuzzy_spark.operators.verify import verify_pairs
+from ufuzzy_spark.operators.verify import WINDOW_BCAST_MAX_ROWS, verify_pairs
 
 
 @dataclass
@@ -155,7 +155,7 @@ def run_pipeline(
     verified = runner.materialize(
         "verified_pairs",
         lambda: verify_pairs(
-            cands, normed, pcfg, broadcast_texts=n_normed <= 500_000
+            cands, normed, pcfg, broadcast_texts=n_normed <= WINDOW_BCAST_MAX_ROWS
         ),
     )
     if checkpoint_dir is None:

@@ -95,7 +95,7 @@ from ufuzzy_spark.operators.lsh import (
 )
 from ufuzzy_spark.operators.minhash import banded_signatures
 from ufuzzy_spark.operators.normalize import normalize
-from ufuzzy_spark.operators.verify import verify_pairs
+from ufuzzy_spark.operators.verify import WINDOW_BCAST_MAX_ROWS, verify_pairs
 
 _SIGS_SCHEMA = "content_hash long, band_hashes array<bigint>, simhash long"
 _VERDICTS_SCHEMA = "hash_lo long, hash_hi long, is_dup boolean"
@@ -284,7 +284,7 @@ def _batch_recompute(
             ver_texts,
             pcfg,
             # ver_texts is semi-join-bounded to <= 2*n_to_verify urls
-            broadcast_texts=2 * n_to_verify <= 500_000,
+            broadcast_texts=2 * n_to_verify <= WINDOW_BCAST_MAX_ROWS,
         ).select("hash_lo", "hash_hi", "is_dup")
     )
     verdicts_all = old_verdicts.unionByName(new_verdicts)
@@ -1018,7 +1018,7 @@ def incremental_dedup(
             ver_texts,
             pcfg,
             # ver_texts is semi-join-bounded to <= 2*n_to_verify urls
-            broadcast_texts=2 * n_to_verify <= 500_000,
+            broadcast_texts=2 * n_to_verify <= WINDOW_BCAST_MAX_ROWS,
         ).select("hash_lo", "hash_hi", "is_dup")
     )
     verdicts_all = old_verdicts.unionByName(new_verdicts)
