@@ -14,8 +14,6 @@ ALLOWED = {
     ("session.py", "SPARK_GRAFT_MASTER"),
     ("session.py", "SPARK_GRAFT_CPUS"),
     ("session.py", "SPARK_DRIVER_MEM"),
-    # debug prints, until a stage-metrics ledger replaces them
-    ("streaming/incremental.py", "UFZ_INCR_DEBUG"),
 }
 
 

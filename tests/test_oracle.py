@@ -110,6 +110,16 @@ def test_digits_match_exactly_in_single_error_mode():
     assert uf.filter(hs, "module 5") == [2]
 
 
+def test_js_digit_class_is_ascii():
+    # JS \d is [0-9]: Arabic-Indic digits are ordinary non-digit chars,
+    # so they get the alpha ladder and count as an inter boundary
+    uf = UFuzzyOracle(MatchConfig(intraMode=1))
+    assert uf.intra_rules("١٢٣٤٥") == uf.intra_rules("abcde")
+    assert uf.intra_rules("12345") != uf.intra_rules("abcde")
+    assert uf.inter_bound_re.search("١")
+    assert not uf.intra_bound_re.search("a١")
+
+
 # -- intraMode 1 SingleError (README How-It-Works examples) ---------- #
 
 @pytest.mark.parametrize(

@@ -256,10 +256,10 @@ class UFuzzyOracle:
         self.trim_re = re.compile("^%s|%s$" % (inter_split, inter_split), re.ASCII)
         self.contrs_re = _compile_js(intra_contr, re.I)
 
-        # uFuzzy.mjs:420-423
+        # uFuzzy.mjs:420-423 (re.ASCII: JS \d, as above)
         self.with_intra_bound = bool(intra_bound)
-        self.inter_bound_re = re.compile(inter_bound)
-        self.intra_bound_re = re.compile(intra_bound)
+        self.inter_bound_re = re.compile(inter_bound, re.ASCII)
+        self.intra_bound_re = re.compile(intra_bound, re.ASCII)
 
         self._num_or_alpha_re = re.compile(r"[^\d]+|\d+", re.ASCII)  # uFuzzy.mjs:248
         # bounded compile cache: PairVerifier/pair_features call
@@ -317,7 +317,7 @@ class UFuzzyOracle:
         _slice = (1, INF)
         _ins = _sub = _trn = _del = 0
 
-        if re.search(r"[^\d]", p):  # digits-only terms stay exact
+        if re.search(r"[^0-9]", p):  # digits-only terms stay exact (JS \d)
             plen = len(p)
             if plen <= 4:
                 if plen >= 3:

@@ -6,9 +6,20 @@ analog is memoizing prior work across snapshots while guaranteeing the
 final clusters equal a single batch run over the union
 (resume-equivalence — the prefixCache contract).
 
-Design (round 4 — O(new + touched), replacing the round-3 full
-relational recompute): EVERY stage is now scoped to the snapshot's
-blast radius, not the cumulative corpus:
+One skeleton, two legs. Every ingest normalizes the snapshot, runs the
+state guards, signs only never-seen texts, then takes one of two legs
+that share their steps (hash attach, memo-miss verify, election,
+journaled persist):
+
+- the **batch leg** (``_batch_recompute``): a full bucket recount over
+  cumulative state with the sig/verdict memo tables applied. The FIRST
+  ingest always takes it (with no prior state the blast radius is
+  total), and so does any snapshot at or above ``batch_cutover_frac``
+  of the post-ingest corpus;
+- the **delta leg**, below: every stage scoped to the snapshot's blast
+  radius, not the cumulative corpus.
+
+Delta-leg design (round 4 — O(new + touched)):
 
 - ``sigs`` state (content_hash -> band hashes, simhash): the Arrow
   signature UDF runs only for never-seen texts. O(new distinct texts).
@@ -89,6 +100,7 @@ from ufuzzy_spark.operators.components import (
     connected_components,
     elect_canonical,
 )
+from ufuzzy_spark.operators.dedup import exact_dedup
 from ufuzzy_spark.operators.lsh import (
     candidate_pair_counts,
     postings_from_band_hashes,
@@ -99,8 +111,8 @@ from ufuzzy_spark.operators.verify import WINDOW_BCAST_MAX_ROWS, verify_pairs
 
 _SIGS_SCHEMA = "content_hash long, band_hashes array<bigint>, simhash long"
 _VERDICTS_SCHEMA = "hash_lo long, hash_hi long, is_dup boolean"
-_PAIR_CNT_SCHEMA = "url_a string, url_b string, d int"
 _REPS_SCHEMA = "content_hash long, old_rep_url string"
+_SLIM_COLS = ("url", "content_hash", "n_chars", "warc_ts")
 
 # bucketed state layout (VERDICT r4 next #6 — the docs/PLANS.md
 # residual-cost claim, made real): FULL snapshots of the memo tables
@@ -135,6 +147,24 @@ _BCAST_MAX_ROWS = 8_000_000
 
 def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
     return F.broadcast(df) if n_rows <= _BCAST_MAX_ROWS else df
+
+
+def _fence(df: DataFrame) -> DataFrame:
+    """Materialize a small/derived frame consumed by several actions.
+
+    localCheckpoint, not persist: the incremental frames chain deeply
+    and reference each other several times — persist() caches
+    execution but keeps the full LOGICAL plan, so the analyzer tree
+    doubles per stage (measured: driver-heap OOM by the ~14th fence at
+    600 docs). Checkpointing truncates each stage to a leaf; blocks are
+    small (bounded by the snapshot / touched-bucket size) and reclaimed
+    by the ContextCleaner once the frames go out of scope. Cumulative
+    STATE reads are deliberately never fenced — they are broadcast-
+    filtered column-pruned scans, re-scanned per use, which is the
+    shape that survives 100 TB (no executor-memory residency
+    proportional to corpus size).
+    """
+    return df.localCheckpoint(eager=True)
 
 
 def _check_config_guard(catalog: LocalParquetCatalog, pcfg: PipelineConfig):
@@ -174,84 +204,32 @@ def _hash_postings(sigs: DataFrame, pcfg: PipelineConfig) -> DataFrame:
     ).withColumnRenamed("url", "content_hash")
 
 
-def _batch_recompute(
-    spark: SparkSession,
-    catalog: LocalParquetCatalog,
-    pcfg: PipelineConfig,
-    fence,
-    stats_out: dict | None,
-    old_sigs: DataFrame,
-    old_verdicts: DataFrame,
-    old_normed: DataFrame | None,
-    new_normed: DataFrame,
-    new_sigs: DataFrame,
-    new_slim: DataFrame,
-    all_keys: DataFrame,
-    compact_every: int,
-    state_buckets: int = 0,
-    ingest_id: str | None = None,
-) -> DataFrame:
-    """Batch-over-state leg of the adaptive cutover (VERDICT r4 #3).
-
-    When the snapshot is a large fraction of the corpus, the
-    touched-bucket delta machinery costs MORE than recomputing: the
-    blast radius is near-total, so the ingest pays refcount and
-    dissolution bookkeeping ON TOP of an almost-full recount. This leg
-    runs the batch operators (full bucket recount -> verify -> CC ->
-    election) over cumulative state while KEEPING the two memo tables
-    — signatures by content hash and verdicts by content-hash pair —
-    so the expensive Arrow UDF stages still touch only never-seen
-    content. Output clusters are bit-equal to ``run_pipeline`` over
-    the union of all snapshots (same reps, same bucket members, same
-    verdict keys, same CC labels; pinned by
-    tests/test_operators.py::test_cutover_matches_batch_and_incremental).
-
-    State writes match the delta leg in SHAPE: sigs/normed/verdicts
-    append their deltas; pair_cnt is written as a fresh FULL recount
-    (a full snapshot supersedes the delta chain in read_all, and the
-    recount equals the running sum by candidate_pair_counts' purity).
-    """
-    sigs_all = old_sigs.unionByName(new_sigs)
-    reps_all = fence(
-        all_keys.groupBy("content_hash").agg(F.min("url").alias("url"))
+def _endpoints(pairs: DataFrame) -> DataFrame:
+    """(url_a, url_b) -> the distinct urls on either side, as ``url``."""
+    return (
+        pairs.select(F.col("url_a").alias("url"))
+        .unionByName(pairs.select(F.col("url_b").alias("url")))
+        .distinct()
     )
-    n_reps = reps_all.count()
-    posts = (
-        _hash_postings(sigs_all, pcfg)
-        .join(_maybe_broadcast(reps_all, n_reps), "content_hash")
-        .select("url", "band_id", "band_hash")
-    )
-    pair_counts = fence(candidate_pair_counts(posts, pcfg))
-    n_pairs = pair_counts.count()
-    if stats_out is not None:
-        stats_out["mode"] = "batch_recompute"
-        stats_out["cand_pairs"] = n_pairs
-        # touched_buckets / pairs_added / pairs_removed /
-        # old_x_old_reverified / dissolved_components are delta-leg
-        # bookkeeping; this leg recounts everything and tracks none
 
-    pairs_h = fence(
-        pair_counts.select("url_a", "url_b")
-        .join(
-            _maybe_broadcast(
-                reps_all.select(
-                    F.col("url").alias("url_a"),
-                    F.col("content_hash").alias("hash_a"),
-                ),
-                n_reps,
+
+def _attach_hashes(pairs: DataFrame, url_map: DataFrame, n_map: int) -> DataFrame:
+    """(url_a, url_b) -> + hash_lo, hash_hi, looking both urls up in
+    ``url_map`` (url, content_hash), which must cover the pairs' urls
+    and is broadcast when its ``n_map`` rows allow."""
+
+    def side(s: str) -> DataFrame:
+        return _maybe_broadcast(
+            url_map.select(
+                F.col("url").alias(f"url_{s}"),
+                F.col("content_hash").alias(f"hash_{s}"),
             ),
-            "url_a",
+            n_map,
         )
-        .join(
-            _maybe_broadcast(
-                reps_all.select(
-                    F.col("url").alias("url_b"),
-                    F.col("content_hash").alias("hash_b"),
-                ),
-                n_reps,
-            ),
-            "url_b",
-        )
+
+    return (
+        pairs.join(side("a"), "url_a")
+        .join(side("b"), "url_b")
         .select(
             "url_a",
             "url_b",
@@ -259,26 +237,46 @@ def _batch_recompute(
             F.greatest("hash_a", "hash_b").alias("hash_hi"),
         )
     )
-    to_verify = fence(
-        pairs_h.join(old_verdicts, ["hash_lo", "hash_hi"], "left_anti")
+
+
+def _dup_edges(pairs_h: DataFrame, verdicts: DataFrame, n_pairs: int) -> DataFrame:
+    """(url_a, url_b, hash_lo, hash_hi) -> the (url_a, url_b) rows
+    whose memoized verdict is a dup, probing ``verdicts`` through a
+    broadcast filter of the ``n_pairs`` pairs' hash keys (every pair
+    must already have a verdict there)."""
+    keys = ["hash_lo", "hash_hi"]
+    hits = verdicts.join(
+        _maybe_broadcast(pairs_h.select(*keys), n_pairs), keys, "left_semi"
     )
+    return (
+        pairs_h.join(_maybe_broadcast(hits, n_pairs), keys)
+        .where("is_dup")
+        .select("url_a", "url_b")
+    )
+
+
+def _verify_misses(
+    to_verify: DataFrame,
+    texts: DataFrame,
+    pcfg: PipelineConfig,
+    stats_out: dict | None,
+) -> DataFrame:
+    """Verify the memo-miss pairs (url_a, url_b, hash_lo, hash_hi)
+    against ``texts`` (url, norm_text) -> fresh verdict rows
+    (hash_lo, hash_hi, is_dup). Stored norm_text is already the verify
+    window and verify_pairs re-windows identically, so verdicts match
+    batch bit-for-bit."""
     n_to_verify = to_verify.count()
     if stats_out is not None:
         stats_out["pairs_verified"] = n_to_verify
-    ver_urls = (
-        to_verify.select(F.col("url_a").alias("url"))
-        .unionByName(to_verify.select(F.col("url_b").alias("url")))
-        .distinct()
+    ver_texts = texts.join(
+        _maybe_broadcast(_endpoints(to_verify), 2 * n_to_verify),
+        "url",
+        "left_semi",
     )
-    ver_texts = new_normed.select("url", "norm_text")
-    if old_normed is not None:
-        # stored norm_text is already the verify window — verify_pairs
-        # re-windows identically, so verdicts match batch bit-for-bit
-        ver_texts = old_normed.select("url", "norm_text").unionByName(ver_texts)
-    ver_texts = ver_texts.join(
-        _maybe_broadcast(ver_urls, 2 * n_to_verify), "url", "left_semi"
-    )
-    new_verdicts = fence(
+    # hash keys ride THROUGH the verify UDF stage (verify_pairs
+    # passthrough) — no million-row join-back to recover them
+    return _fence(
         verify_pairs(
             to_verify.select("url_a", "url_b", "hash_lo", "hash_hi"),
             ver_texts,
@@ -287,76 +285,145 @@ def _batch_recompute(
             broadcast_texts=2 * n_to_verify <= WINDOW_BCAST_MAX_ROWS,
         ).select("hash_lo", "hash_hi", "is_dup")
     )
-    verdicts_all = old_verdicts.unionByName(new_verdicts)
-    dup_edges = (
-        pairs_h.join(verdicts_all, ["hash_lo", "hash_hi"])
-        .where("is_dup")
-        .select("url_a", "url_b")
-    )
-    # exact-hash stars: every member edges to its corpus-wide min-url
-    # rep — the same connectivity batch exact_dedup emits
-    exact_edges = (
-        all_keys.join(
-            _maybe_broadcast(
-                reps_all.withColumnRenamed("url", "rep_url"), n_reps
-            ),
-            "content_hash",
-        )
-        .where(F.col("url") != F.col("rep_url"))
-        .select(F.col("rep_url").alias("url_a"), F.col("url").alias("url_b"))
-    )
-    labels = connected_components(
-        exact_edges.unionByName(dup_edges), all_nodes=all_keys.select("url")
-    )
-    slim_all = (
-        old_normed.select("url", "content_hash", "n_chars", "warc_ts").unionByName(
-            new_slim.select("url", "content_hash", "n_chars", "warc_ts")
-        )
-        if old_normed is not None
-        else new_slim.select("url", "content_hash", "n_chars", "warc_ts")
-    )
-    clusters = elect_canonical(labels, slim_all, n_chars_col="n_chars")
 
-    # persist: same all-or-nothing discipline as the delta leg. The
-    # FIRST ingest (no prior chain) writes FULL snapshots so the
-    # state_buckets layout applies from snapshot 1, not first
-    # compaction; cutover ingests append deltas onto the chain.
-    if ingest_id is not None:
-        catalog.journal_begin(ingest_id, {"leg": "batch"})
-    if catalog.exists("sigs"):
-        catalog.append(new_sigs, "sigs")
-        catalog.append(new_slim, "normed")
-        catalog.append(new_verdicts, "verdicts")
-    else:
-        catalog.write(new_sigs, "sigs", bucket_by=_bspec("sigs", state_buckets))
-        catalog.write(
-            new_slim, "normed", bucket_by=_bspec("normed", state_buckets)
-        )
-        catalog.write(
-            new_verdicts,
-            "verdicts",
-            bucket_by=_bspec("verdicts", state_buckets),
-        )
-    catalog.write(
-        pair_counts.select("url_a", "url_b", F.col("cnt").cast("int").alias("d")),
-        "pair_cnt",
+
+def _sum_pair_cnt(pair_cnt: DataFrame) -> DataFrame:
+    """Fold refcount deltas to their running sums; zero-sum pairs drop
+    out (an absent pair reads as count 0, identically)."""
+    return (
+        pair_cnt.groupBy("url_a", "url_b")
+        .agg(F.sum("d").cast("int").alias("d"))
+        .where("d != 0")
     )
+
+
+def _persist(
+    spark: SparkSession,
+    catalog: LocalParquetCatalog,
+    ingest_id: str,
+    leg: str,
+    memo_rows: dict[str, DataFrame],
+    pair_cnt: DataFrame,
+    clusters: DataFrame,
+    compact_every: int,
+    state_buckets: int,
+) -> DataFrame:
+    """Write one ingest's state and return the new clusters table.
+
+    ALL state lands here, together, after every failure-prone stage
+    (verify, CC, election) has completed — the pair_cnt delta
+    included, so a re-run after a mid-ingest failure starts from clean
+    state (the duplicate-url guard then correctly rejects or accepts
+    the whole snapshot; refcounts can never be half-applied). A death
+    INSIDE the write block is the one window compute-then-persist
+    cannot cover — the journal markers bracket it, turning would-be
+    silent corruption into a loud torn-state refusal.
+
+    ``memo_rows`` holds this ingest's new sigs/normed/verdicts rows:
+    FULL snapshots on the first ingest (so the ``state_buckets``
+    layout applies from snapshot 1, not first compaction), appended
+    deltas after. ``pair_cnt`` is the batch leg's full recount (a full
+    snapshot supersedes the delta chain in read_all) or the delta
+    leg's refcount delta, appended.
+    """
+    first = not catalog.exists("sigs")
+    catalog.journal_begin(ingest_id, {"leg": leg})
+    for table, rows in memo_rows.items():
+        if first:
+            catalog.write(rows, table, bucket_by=_bspec(table, state_buckets))
+        else:
+            catalog.append(rows, table)
+    if leg == "delta":
+        catalog.append(pair_cnt, "pair_cnt")
+    else:
+        catalog.write(pair_cnt, "pair_cnt")
     catalog.write(clusters, "clusters")
-    if ingest_id is not None:
-        # commit BEFORE compaction: compaction is a pure re-layout
-        # whose own writes are individually crash-atomic (a died
-        # compaction leaves only an invisible staging dir), so it
-        # belongs outside the multi-table transaction
-        catalog.journal_commit(ingest_id)
+    # commit BEFORE compaction: compaction is a pure re-layout whose
+    # own writes are individually crash-atomic (a died compaction
+    # leaves only an invisible staging dir), so it belongs outside the
+    # multi-table transaction
+    catalog.journal_commit(ingest_id)
+
+    # bound the delta chains (read_all unions every delta since the
+    # last full snapshot; unbounded chains grow listing + scan cost).
+    # pair_cnt's compaction is a no-op after the batch leg's recount.
     if compact_every:
-        for table in ("sigs", "normed", "verdicts"):
+        for table in memo_rows:
             catalog.maybe_compact(
                 spark,
                 table,
                 max_deltas=compact_every,
                 bucket_by=_bspec(table, state_buckets),
             )
+        catalog.maybe_compact(
+            spark, "pair_cnt", max_deltas=compact_every, transform=_sum_pair_cnt
+        )
     return catalog.read(spark, "clusters")
+
+
+def _batch_recompute(
+    pcfg: PipelineConfig,
+    stats_out: dict | None,
+    sigs_all: DataFrame,
+    old_verdicts: DataFrame,
+    all_keys: DataFrame,
+    texts: DataFrame,
+    slim_all: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Batch-over-state leg -> (pair_cnt, new_verdicts, clusters).
+
+    Takes the first ingest, and any snapshot so large that the
+    touched-bucket delta machinery would cost MORE than recomputing:
+    the blast radius is near-total, so the ingest would pay refcount
+    and dissolution bookkeeping ON TOP of an almost-full recount
+    (VERDICT r4 #3). This leg runs the batch operators (exact dedup ->
+    full bucket recount -> verify -> CC -> election) over cumulative
+    state while KEEPING the two memo tables — signatures by content
+    hash and verdicts by content-hash pair — so the expensive Arrow
+    UDF stages still touch only never-seen content. Output clusters
+    are bit-equal to ``run_pipeline`` over the union of all snapshots
+    (same reps, same bucket members, same verdict keys, same CC
+    labels; pinned by
+    tests/test_operators.py::test_cutover_matches_batch_and_incremental).
+
+    ``pair_cnt`` is a fresh FULL recount: it equals the delta leg's
+    running sum by candidate_pair_counts' purity.
+    """
+    # exact-hash stars: every member edges to its corpus-wide min-url
+    # rep — the same connectivity and reps batch exact_dedup emits
+    exact_edges, reps = exact_dedup(all_keys, hash_col="content_hash")
+    reps_all = _fence(reps)
+    n_reps = reps_all.count()
+    posts = (
+        _hash_postings(sigs_all, pcfg)
+        .join(_maybe_broadcast(reps_all, n_reps), "content_hash")
+        .select("url", "band_id", "band_hash")
+    )
+    pair_counts = _fence(candidate_pair_counts(posts, pcfg))
+    if stats_out is not None:
+        stats_out["mode"] = "batch_recompute"
+        stats_out["cand_pairs"] = pair_counts.count()
+
+    pairs_h = _fence(
+        _attach_hashes(pair_counts.select("url_a", "url_b"), reps_all, n_reps)
+    )
+    to_verify = _fence(
+        pairs_h.join(old_verdicts, ["hash_lo", "hash_hi"], "left_anti")
+    )
+    new_verdicts = _verify_misses(to_verify, texts, pcfg, stats_out)
+    dup_edges = (
+        pairs_h.join(
+            old_verdicts.unionByName(new_verdicts), ["hash_lo", "hash_hi"]
+        )
+        .where("is_dup")
+        .select("url_a", "url_b")
+    )
+    labels = connected_components(
+        exact_edges.unionByName(dup_edges), all_nodes=all_keys.select("url")
+    )
+    clusters = elect_canonical(labels, slim_all, n_chars_col="n_chars")
+    pair_cnt = pair_counts.select("url_a", "url_b", F.col("cnt").alias("d"))
+    return pair_cnt, new_verdicts, clusters
 
 
 def incremental_dedup(
@@ -374,23 +441,27 @@ def incremental_dedup(
     updated full clusters table (also written as a new snapshot),
     bit-equal to ``run_pipeline`` over the union of all snapshots.
 
-    ``batch_cutover_frac``: when the snapshot is at least this fraction
-    of the post-ingest corpus, the touched-bucket delta machinery is
-    skipped in favor of ``_batch_recompute`` — a full bucket recount
-    with the sig/verdict memo tables still applied (the delta leg's
-    bookkeeping costs MORE than recomputing once the blast radius is
-    near-total; VERDICT r4). ``None`` disables the cutover (always
-    delta). Both legs write the same state shapes and bit-equal
-    clusters. Default 1/3 sits inside the measured crossover band
-    (BENCH/BASELINE.md round-5 "cutover crossover" tables): at 1M
-    docs the delta leg wins at <=20% snapshots and loses at >=50%;
-    at 300k docs it loses at EVERY fraction, because its fixed
-    bookkeeping cost (~100 s of fenced stages on the bench host) only
-    amortizes when the displaced batch recompute is expensive. The
-    cutover still keys on fraction, not corpus size: the fraction
-    rule is the one that binds in the scale direction, and where it
-    mispredicts (small corpora) the absolute cost of either leg is
-    small.
+    The first ingest into an empty catalog always takes the batch leg
+    (``_batch_recompute``): with no prior state the blast radius is
+    total, and the delta machinery would cost 3x the batch leg for the
+    same output (50.3 vs 16.8 s at sf0.1). ``batch_cutover_frac``
+    routes every LATER ingest: when the snapshot is at least this
+    fraction of the post-ingest corpus, the touched-bucket delta
+    machinery is skipped in favor of ``_batch_recompute`` — a full
+    bucket recount with the sig/verdict memo tables still applied (the
+    delta leg's bookkeeping costs MORE than recomputing once the blast
+    radius is near-total; VERDICT r4). ``None`` takes the delta leg
+    for every ingest after the first. Both legs write the same state
+    shapes and bit-equal clusters. Default 1/3 sits inside the
+    measured crossover band (BENCH/BASELINE.md round-5 "cutover
+    crossover" tables): at 1M docs the delta leg wins at <=20%
+    snapshots and loses at >=50%; at 300k docs it loses at EVERY
+    fraction, because its fixed bookkeeping cost (~100 s of fenced
+    stages on the bench host) only amortizes when the displaced batch
+    recompute is expensive. The cutover still keys on fraction, not
+    corpus size: the fraction rule is the one that binds in the scale
+    direction, and where it mispredicts (small corpora) the absolute
+    cost of either leg is small.
 
     Contract: urls are unique ACROSS snapshots (they are the identity
     every state table and CC node keys on); a snapshot re-ingesting a
@@ -425,25 +496,32 @@ def incremental_dedup(
     Layout only — clusters are bit-identical either way, so it is NOT
     part of config_hash and can be turned on at any compaction.
 
-    ``stats_out``, when given, is filled with:
+    ``stats_out``, when given, is filled with ``mode`` — which path
+    ran: ``initial`` (first ingest, batch leg), ``batch_recompute``
+    (cutover), ``delta`` or ``replay_skip`` (an already-committed
+    ``ingest_id``; no other key is filled) — and:
 
-    - ``cand_pairs``: pair-count DELTA rows from touched buckets this
-      snapshot (clique-delta for under-cap buckets, full before/after
-      re-count for over-cap ones; includes old x old pairs whose
-      counts shifted),
-    - ``pairs_added`` / ``pairs_removed``: logical pair-set delta,
-    - ``pairs_verified``: verdict-memo misses actually verified,
-    - ``old_x_old_reverified``: verified pairs whose BOTH urls predate
-      this snapshot — 0 unless a new doc shifted cap ranks inside an
-      already-over-cap bucket; the `incremental_ingest` driver entry
-      pins 0 (the expensive stage never re-pairs old x old),
-    - ``new_sigs_computed``: never-seen texts signed this snapshot,
-    - ``touched_buckets``: blast radius (fraction = divide by the
-      post-hoc distinct bucket count over the sigs state),
-    - ``reps_churned``: existing content hashes whose representative
-      url changed (a smaller url arrived for known content),
-    - ``dissolved_components``: prior components re-solved because a
-      pair they relied on was retired.
+    - every leg: ``new_sigs_computed`` (never-seen texts signed this
+      snapshot), ``reps_churned`` (existing content hashes whose
+      representative url changed: a smaller url arrived for known
+      content), ``pairs_verified`` (verdict-memo misses actually
+      verified) and ``cand_pairs`` (batch leg: pair rows of the full
+      bucket recount; delta leg: pair-count DELTA rows from touched
+      buckets — clique-delta for under-cap buckets, full before/after
+      re-count for over-cap ones, including old x old pairs whose
+      counts shifted);
+    - ``initial`` also: ``pairs_removed``, ``dissolved_components``
+      and ``old_x_old_reverified``, all 0 by definition (no prior
+      state);
+    - ``delta`` also: ``touched_buckets`` (blast radius; fraction =
+      divide by the post-hoc distinct bucket count over the sigs
+      state), ``pairs_added`` / ``pairs_removed`` (logical pair-set
+      delta), ``old_x_old_reverified`` (verified pairs whose BOTH urls
+      predate this snapshot — 0 unless a new doc shifted cap ranks
+      inside an already-over-cap bucket; the `incremental_ingest`
+      driver entry pins 0: the expensive stage never re-pairs
+      old x old) and ``dissolved_components`` (prior components
+      re-solved because a pair they relied on was retired).
     """
     pcfg = pcfg or PipelineConfig()
     _check_config_guard(catalog, pcfg)
@@ -470,36 +548,7 @@ def incremental_dedup(
 
     win = 2 * pcfg.verify_window_chars
 
-    # lineage fences: small/derived frames consumed by several actions
-    # are materialized once; cumulative STATE reads are deliberately
-    # NOT fenced — they are broadcast-filtered column-pruned scans,
-    # re-scanned per use, which is the shape that survives 100 TB (no
-    # executor-memory residency proportional to corpus size)
-    import os as _os
-    import time as _time
-
-    _dbg = _os.environ.get("UFZ_INCR_DEBUG") == "1"
-    _n_fences = [0]
-
-    def fence(df: DataFrame) -> DataFrame:
-        # localCheckpoint, not persist: the incremental frames chain
-        # deeply and reference each other several times — persist()
-        # caches execution but keeps the full LOGICAL plan, so the
-        # analyzer tree doubles per stage (measured: driver-heap OOM by
-        # the ~14th fence at 600 docs). Checkpointing truncates each
-        # stage to a leaf; blocks are small (bounded by the snapshot /
-        # touched-bucket size) and reclaimed by the ContextCleaner once
-        # the frames go out of scope.
-        i = _n_fences[0]
-        _n_fences[0] += 1
-        t0 = _time.time()
-        df = df.localCheckpoint(eager=True)
-        if _dbg:
-            print(f"[incr] fence#{i}: rows={df.count()} "
-                  f"wall={_time.time()-t0:.2f}s cols={df.columns}", flush=True)
-        return df
-
-    new_normed = fence(
+    new_normed = _fence(
         normalize(new_pages.where(F.col("lang") == "en"), pcfg.match)
         .select("url", "warc_ts", "norm_text")
         .withColumn("content_hash", F.xxhash64("norm_text"))
@@ -521,6 +570,19 @@ def incremental_dedup(
             "duplicate url(s) within itself; urls must be unique across "
             "AND within snapshots (dedupe or version the urls upstream)"
         )
+
+    # cumulative slim doc state: verify window + election keys only
+    # (full norm_text is never needed again — sigs are memoized)
+    new_slim = new_normed.select(
+        "url",
+        "content_hash",
+        F.substring("norm_text", 1, win).alias("norm_text"),
+        F.length("norm_text").alias("n_chars"),
+        "warc_ts",
+    )
+    all_keys = new_normed.select("url", "content_hash")
+    texts = new_normed.select("url", "norm_text")
+    slim_all = new_slim.select(*_SLIM_COLS)
 
     has_state = catalog.exists("sigs")
     if has_state:
@@ -554,6 +616,9 @@ def incremental_dedup(
                 "were already ingested; urls must be unique across "
                 "snapshots (dedupe or version the urls upstream)"
             )
+        all_keys = old_keys.unionByName(all_keys)
+        texts = old_normed.select("url", "norm_text").unionByName(texts)
+        slim_all = old_normed.select(*_SLIM_COLS).unionByName(slim_all)
     elif catalog.exists("bands") or catalog.exists("edges"):
         raise ValueError(
             "incremental_dedup: catalog holds legacy state tables "
@@ -561,13 +626,12 @@ def incremental_dedup(
             "by re-ingesting snapshots into a fresh catalog"
         )
     else:
+        # first ingest: empty memo tables (only the batch leg reads them)
         old_sigs = spark.createDataFrame([], _SIGS_SCHEMA)
-        old_normed = None
         old_verdicts = spark.createDataFrame([], _VERDICTS_SCHEMA)
-        old_keys = None
 
     # --- per-hash min url within this batch (rep candidates) -------- #
-    batch_min = fence(
+    batch_min = _fence(
         new_normed.groupBy("content_hash").agg(
             F.min("url").alias("new_min_url")
         )
@@ -577,8 +641,8 @@ def incremental_dedup(
     # rep(h) = min url ever ingested with hash h (exact_dedup's
     # orderBy("url") election) — min is associative, so the prior rep
     # is a broadcast-filtered scan of (url, content_hash) + a tiny agg
-    if old_keys is not None:
-        old_reps_batch = fence(
+    if has_state:
+        old_reps_batch = _fence(
             old_keys.join(
                 _maybe_broadcast(batch_min.select("content_hash"), n_new),
                 "content_hash",
@@ -590,7 +654,7 @@ def incremental_dedup(
     else:
         old_reps_batch = spark.createDataFrame([], _REPS_SCHEMA)
 
-    merged_reps = fence(batch_min.join(old_reps_batch, "content_hash", "left"))
+    merged_reps = _fence(batch_min.join(old_reps_batch, "content_hash", "left"))
     new_hashes = merged_reps.where(F.col("old_rep_url").isNull()).select(
         "content_hash"
     )
@@ -612,7 +676,7 @@ def incremental_dedup(
         # is text-addressed (memo survives representative churn)
         .select(F.col("content_hash").alias("url"), "norm_text")
     )
-    new_sigs = fence(
+    new_sigs = _fence(
         banded_signatures(sig_inputs, pcfg).withColumnRenamed(
             "url", "content_hash"
         )
@@ -620,52 +684,46 @@ def incremental_dedup(
     if stats_out is not None:
         stats_out["new_sigs_computed"] = new_sigs.count()
 
-    # cumulative slim doc state: verify window + election keys only
-    # (full norm_text is never needed again — sigs are memoized)
-    new_slim = new_normed.select(
-        "url",
-        "content_hash",
-        F.substring("norm_text", 1, win).alias("norm_text"),
-        F.length("norm_text").alias("n_chars"),
-        "warc_ts",
-    )
-    all_keys = new_normed.select("url", "content_hash")
-    if old_keys is not None:
-        all_keys = old_keys.unionByName(all_keys)
+    def persist(leg, new_verdicts, pair_cnt, clusters):
+        memo_rows = {"sigs": new_sigs, "normed": new_slim, "verdicts": new_verdicts}
+        return _persist(
+            spark, catalog, ingest_id, leg, memo_rows, pair_cnt, clusters,
+            compact_every, state_buckets,
+        )
 
     # --- adaptive cutover (VERDICT r4 #3) ---------------------------- #
     # everything above (normalize, guards, rep churn, memoized signing)
-    # is shared; everything below is the O(new + touched) delta leg.
-    # n_old is one column-pruned count over the normed state — cheap
-    # relative to either leg, and the decision input that predicts the
-    # blast radius BEFORE paying for touched-bucket expansion. The
-    # FIRST ingest always takes the batch leg: with no prior state the
-    # blast radius is total by definition, and the delta machinery
-    # would pay clique-delta and refcount bookkeeping over every
-    # bucket just to reproduce what one bucket recount emits (measured
-    # at sf0.1: 50.3 s delta-shaped vs 16.8 s batch-shaped for the
-    # same corpus; round 5). Both legs write identical state shapes.
-    if batch_cutover_frac is not None:
-        n_old = old_normed.count() if has_state else 0
-        if n_new >= batch_cutover_frac * (n_new + n_old):
-            out = _batch_recompute(
-                spark, catalog, pcfg, fence, stats_out,
-                old_sigs, old_verdicts, old_normed,
-                new_normed, new_sigs, new_slim, all_keys, compact_every,
-                state_buckets, ingest_id=ingest_id,
+    # is shared; everything below is the O(new + touched) delta leg,
+    # which assumes prior state — an empty catalog always takes the
+    # batch leg. The normed-state count is one column-pruned count —
+    # cheap relative to either leg, and the decision input that
+    # predicts the blast radius BEFORE paying for touched-bucket
+    # expansion.
+    if not has_state or (
+        batch_cutover_frac is not None
+        and n_new >= batch_cutover_frac * (n_new + old_normed.count())
+    ):
+        pair_cnt, new_verdicts, clusters = _batch_recompute(
+            pcfg, stats_out, old_sigs.unionByName(new_sigs), old_verdicts,
+            all_keys, texts, slim_all,
+        )
+        if stats_out is not None and not has_state:
+            stats_out.update(
+                mode="initial",
+                pairs_removed=0,
+                dissolved_components=0,
+                old_x_old_reverified=0,
             )
-            if stats_out is not None and not has_state:
-                stats_out["mode"] = "initial"
-            return out
+        return persist("batch", new_verdicts, pair_cnt, clusters)
     if stats_out is not None:
-        stats_out["mode"] = "delta" if has_state else "initial"
+        stats_out["mode"] = "delta"
 
     # --- touched buckets: keys gaining a new hash or a churned rep -- #
     new_posts = _hash_postings(new_sigs, pcfg)
     churned_sigs = old_sigs.join(
         _maybe_broadcast(churned, n_new), "content_hash", "left_semi"
     )
-    touched_keys = fence(
+    touched_keys = _fence(
         new_posts.select("band_id", "band_hash")
         .unionByName(
             _hash_postings(churned_sigs, pcfg).select("band_id", "band_hash")
@@ -681,42 +739,29 @@ def incremental_dedup(
         stats_out["touched_buckets"] = n_touched
 
     # member postings of touched buckets: broadcast-filtered narrow
-    # explode of the sigs state — no shuffle reaches untouched keys.
-    # First ingest short-circuits: there IS no old state to filter,
-    # and the touched set is the whole corpus (too big to broadcast).
-    if old_keys is not None:
-        old_member_posts = fence(
-            _hash_postings(old_sigs, pcfg).join(
-                _maybe_broadcast(touched_keys, n_touched),
-                ["band_id", "band_hash"],
-                "left_semi",
-            )
+    # explode of the sigs state — no shuffle reaches untouched keys
+    old_member_posts = _fence(
+        _hash_postings(old_sigs, pcfg).join(
+            _maybe_broadcast(touched_keys, n_touched),
+            ["band_id", "band_hash"],
+            "left_semi",
         )
-        n_member_posts = old_member_posts.count() + n_touched
-    else:
-        old_member_posts = spark.createDataFrame(
-            [], "band_id int, band_hash bigint, content_hash long"
-        )
-        n_member_posts = n_touched
+    )
+    n_member_posts = old_member_posts.count() + n_touched
     all_member_posts = old_member_posts.unionByName(new_posts)
     member_hashes = all_member_posts.select("content_hash").distinct()
 
     # reps for member hashes, before and after this snapshot
-    if old_keys is not None:
-        old_reps_members = fence(
-            old_keys.join(
-                _maybe_broadcast(member_hashes, n_member_posts),
-                "content_hash",
-                "left_semi",
-            )
-            .groupBy("content_hash")
-            .agg(F.min("url").alias("url"))
+    old_reps_members = _fence(
+        old_keys.join(
+            _maybe_broadcast(member_hashes, n_member_posts),
+            "content_hash",
+            "left_semi",
         )
-    else:
-        old_reps_members = spark.createDataFrame(
-            [], "content_hash long, url string"
-        )
-    new_reps_members = fence(
+        .groupBy("content_hash")
+        .agg(F.min("url").alias("url"))
+    )
+    new_reps_members = _fence(
         old_reps_members.withColumnRenamed("url", "old_url")
         .join(batch_min, "content_hash", "outer")
         .select(
@@ -736,79 +781,69 @@ def incremental_dedup(
         new_reps_members.withColumnRenamed("url", "new_url"), "content_hash"
     )
 
-    if old_keys is None:
-        # first ingest: every bucket is new — one full count pass (the
-        # clique-delta join below would emit the same volume, slower)
-        changed = fence(
-            candidate_pair_counts(
-                mem.select(F.col("new_url").alias("url"), "band_id", "band_hash"),
-                pcfg,
-            )
-            .select("url_a", "url_b", F.col("cnt").alias("d"))
-        )
-    else:
-        # split touched buckets by whether the cap machinery can fire.
-        # A bucket at <= max_bucket_size members on BOTH sides emits the
-        # full clique (no salt overflow: every salt group <= bucket
-        # size <= cap; no phase-2 truncation) — so its pair DELTA is
-        # exactly the clique edges incident to changed members, and the
-        # bucket never needs re-expansion. Over-cap buckets keep the
-        # full before/after re-count (cap ranks shift arbitrarily).
-        cap = pcfg.max_bucket_size
-        w_b = Window.partitionBy("band_id", "band_hash")
-        sized = mem.withColumn(
-            "new_size", F.count(F.lit(1)).over(w_b)
-        ).withColumn("old_size", F.count("old_url").over(w_b))
-        direct = sized.where(F.greatest("old_size", "new_size") <= cap)
-        capped = sized.where(F.greatest("old_size", "new_size") > cap)
+    # split touched buckets by whether the cap machinery can fire.
+    # A bucket at <= max_bucket_size members on BOTH sides emits the
+    # full clique (no salt overflow: every salt group <= bucket
+    # size <= cap; no phase-2 truncation) — so its pair DELTA is
+    # exactly the clique edges incident to changed members, and the
+    # bucket never needs re-expansion. Over-cap buckets keep the
+    # full before/after re-count (cap ranks shift arbitrarily).
+    cap = pcfg.max_bucket_size
+    w_b = Window.partitionBy("band_id", "band_hash")
+    sized = mem.withColumn(
+        "new_size", F.count(F.lit(1)).over(w_b)
+    ).withColumn("old_size", F.count("old_url").over(w_b))
+    direct = sized.where(F.greatest("old_size", "new_size") <= cap)
+    capped = sized.where(F.greatest("old_size", "new_size") > cap)
 
-        # direct path: edges of the NEW clique incident to an added/
-        # rekeyed member (+1), edges of the OLD clique incident to a
-        # removed/rekeyed member (-1). The (a < m) guard emits a
-        # changed-changed pair exactly once.
-        def _clique_delta(members: DataFrame, sign: int) -> DataFrame:
-            a_rows = members.where("m_chg").select(
-                "band_id", "band_hash", F.col("m").alias("a")
+    # direct path: edges of the NEW clique incident to an added/
+    # rekeyed member (+1), edges of the OLD clique incident to a
+    # removed/rekeyed member (-1). The (a < m) guard emits a
+    # changed-changed pair exactly once.
+    def _clique_delta(members: DataFrame, sign: int) -> DataFrame:
+        a_rows = members.where("m_chg").select(
+            "band_id", "band_hash", F.col("m").alias("a")
+        )
+        return (
+            a_rows.join(members, ["band_id", "band_hash"])
+            .where(
+                (F.col("a") != F.col("m"))
+                & (~F.col("m_chg") | (F.col("a") < F.col("m")))
             )
-            return (
-                a_rows.join(members, ["band_id", "band_hash"])
-                .where(
-                    (F.col("a") != F.col("m"))
-                    & (~F.col("m_chg") | (F.col("a") < F.col("m")))
-                )
-                .select(
-                    F.least("a", "m").alias("url_a"),
-                    F.greatest("a", "m").alias("url_b"),
-                    F.lit(sign).alias("d"),
-                )
+            .select(
+                F.least("a", "m").alias("url_a"),
+                F.greatest("a", "m").alias("url_b"),
+                F.lit(sign).alias("d"),
             )
+        )
 
-        new_side = direct.select(
-            "band_id",
-            "band_hash",
-            F.col("new_url").alias("m"),
-            (
-                F.col("old_url").isNull()
-                | (F.col("old_url") != F.col("new_url"))
-            ).alias("m_chg"),
-        )
-        old_side = direct.where(F.col("old_url").isNotNull()).select(
-            "band_id",
-            "band_hash",
-            F.col("old_url").alias("m"),
-            (F.col("old_url") != F.col("new_url")).alias("m_chg"),
-        )
-        capped_old = candidate_pair_counts(
-            capped.where(F.col("old_url").isNotNull()).select(
-                F.col("old_url").alias("url"), "band_id", "band_hash"
-            ),
-            pcfg,
-        )
-        capped_new = candidate_pair_counts(
-            capped.select(F.col("new_url").alias("url"), "band_id", "band_hash"),
-            pcfg,
-        )
-        changed = fence(
+    new_side = direct.select(
+        "band_id",
+        "band_hash",
+        F.col("new_url").alias("m"),
+        (
+            F.col("old_url").isNull()
+            | (F.col("old_url") != F.col("new_url"))
+        ).alias("m_chg"),
+    )
+    old_side = direct.where(F.col("old_url").isNotNull()).select(
+        "band_id",
+        "band_hash",
+        F.col("old_url").alias("m"),
+        (F.col("old_url") != F.col("new_url")).alias("m_chg"),
+    )
+    capped_old = candidate_pair_counts(
+        capped.where(F.col("old_url").isNotNull()).select(
+            F.col("old_url").alias("url"), "band_id", "band_hash"
+        ),
+        pcfg,
+    )
+    capped_new = candidate_pair_counts(
+        capped.select(F.col("new_url").alias("url"), "band_id", "band_hash"),
+        pcfg,
+    )
+    changed = _fence(
+        _sum_pair_cnt(
             _clique_delta(new_side, 1)
             .unionByName(_clique_delta(old_side, -1))
             .unionByName(
@@ -817,10 +852,8 @@ def incremental_dedup(
             .unionByName(
                 capped_old.select("url_a", "url_b", (-F.col("cnt")).alias("d"))
             )
-            .groupBy("url_a", "url_b")
-            .agg(F.sum("d").cast("int").alias("d"))
-            .where("d != 0")
         )
+    )
     # prior logical counts for the changed pairs: the refcount state is
     # scanned under a broadcast filter of HASHED pair keys (8 bytes/key
     # instead of two url strings; hash false-positives only widen the
@@ -828,40 +861,27 @@ def incremental_dedup(
     n_changed = changed.count()
     if stats_out is not None:
         stats_out["cand_pairs"] = n_changed
-    if not has_state:
-        # first ingest: no prior counts exist — every delta row IS the
-        # logical count (and building a corpus-sized broadcast to probe
-        # an empty state would OOM the driver)
-        judged = fence(
-            changed.select(
-                "url_a",
-                "url_b",
-                F.lit(0).cast("long").alias("prior"),
-                F.col("d").cast("long").alias("new_tot"),
-            )
+    old_pair_cnt = catalog.read_all(spark, "pair_cnt")
+    prior_tot = (
+        old_pair_cnt.join(
+            _maybe_broadcast(
+                changed.select(F.xxhash64("url_a", "url_b").alias("pk")),
+                n_changed,
+            ),
+            F.xxhash64("url_a", "url_b") == F.col("pk"),
+            "left_semi",
         )
-    else:
-        old_pair_cnt = catalog.read_all(spark, "pair_cnt")
-        prior_tot = (
-            old_pair_cnt.join(
-                _maybe_broadcast(
-                    changed.select(F.xxhash64("url_a", "url_b").alias("pk")),
-                    n_changed,
-                ),
-                F.xxhash64("url_a", "url_b") == F.col("pk"),
-                "left_semi",
-            )
-            .groupBy("url_a", "url_b")
-            .agg(F.sum("d").alias("prior"))
+        .groupBy("url_a", "url_b")
+        .agg(F.sum("d").alias("prior"))
+    )
+    judged = _fence(
+        changed.join(prior_tot, ["url_a", "url_b"], "left").select(
+            "url_a",
+            "url_b",
+            F.coalesce("prior", F.lit(0)).alias("prior"),
+            (F.coalesce("prior", F.lit(0)) + F.col("d")).alias("new_tot"),
         )
-        judged = fence(
-            changed.join(prior_tot, ["url_a", "url_b"], "left").select(
-                "url_a",
-                "url_b",
-                F.coalesce("prior", F.lit(0)).alias("prior"),
-                (F.coalesce("prior", F.lit(0)) + F.col("d")).alias("new_tot"),
-            )
-        )
+    )
     # one aggregation job over the fenced `judged` frame folds the
     # refcount invariant guard and the added/removed stats (three
     # driver actions in round 4 — serial latency at snapshot cadence)
@@ -885,102 +905,39 @@ def incremental_dedup(
             "negative — touched-bucket bookkeeping is inconsistent with "
             "pair_cnt state"
         )
-    added = fence(judged.where("prior = 0 and new_tot > 0").select("url_a", "url_b"))
-    removed = fence(judged.where("prior > 0 and new_tot = 0").select("url_a", "url_b"))
+    added = _fence(judged.where("prior = 0 and new_tot > 0").select("url_a", "url_b"))
+    removed = _fence(judged.where("prior > 0 and new_tot = 0").select("url_a", "url_b"))
     n_removed = _j["n_removed"] or 0
     if stats_out is not None:
         stats_out["pairs_added"] = _j["n_added"] or 0
         stats_out["pairs_removed"] = n_removed
 
     # NOTE: the pair_cnt delta is deliberately NOT persisted here. An
-    # ingest that fails between here and the final persist block (CC
-    # non-convergence, OOM, interrupt) must leave NO partial state —
-    # an early-appended delta without its normed rows would pass the
-    # duplicate-url guard on re-run and double the refcounts, silently
-    # missing retirements forever. The dissolution path below reads the
-    # post-snapshot logical counts from an in-memory union instead.
-
-    def _attach_hashes(
-        pairs: DataFrame,
-        url_map: DataFrame | None = None,
-        n_map: int = _BCAST_MAX_ROWS + 1,
-        n_pairs: int = _BCAST_MAX_ROWS + 1,
-    ) -> DataFrame:
-        """(url_a, url_b) -> + hash_lo, hash_hi. ``url_map`` is a
-        (content_hash, url) frame covering the pairs' urls (the small
-        in-memory reps frames for touched-bucket pairs, broadcast when
-        ``n_map`` rows allow); default falls back to a scan of the
-        (url, content_hash) state filtered by the pairs' urls
-        (broadcast only when ``n_pairs`` bounds them under the cap —
-        a retired pair incident to a mega-component can make this set
-        arbitrarily large)."""
-        if url_map is not None:
-            uh = url_map.select("url", "content_hash")
-        else:
-            urls = (
-                pairs.select(F.col("url_a").alias("url"))
-                .unionByName(pairs.select(F.col("url_b").alias("url")))
-                .distinct()
-            )
-            uh = all_keys.join(
-                _maybe_broadcast(urls, 2 * n_pairs), "url", "left_semi"
-            )
-            n_map = 2 * n_pairs  # urls per pair bound the map size
-        return (
-            pairs.join(
-                _maybe_broadcast(uh.select(
-                    F.col("url").alias("url_a"),
-                    F.col("content_hash").alias("hash_a"),
-                ), n_map),
-                "url_a",
-            )
-            .join(
-                _maybe_broadcast(uh.select(
-                    F.col("url").alias("url_b"),
-                    F.col("content_hash").alias("hash_b"),
-                ), n_map),
-                "url_b",
-            )
-            .select(
-                "url_a",
-                "url_b",
-                F.least("hash_a", "hash_b").alias("hash_lo"),
-                F.greatest("hash_a", "hash_b").alias("hash_hi"),
-            )
-        )
+    # ingest that fails between here and _persist (CC non-convergence,
+    # OOM, interrupt) must leave NO partial state — an early-appended
+    # delta without its normed rows would pass the duplicate-url guard
+    # on re-run and double the refcounts, silently missing retirements
+    # forever. The dissolution path below reads the post-snapshot
+    # logical counts from an in-memory union instead.
 
     # --- incremental stage 2: verify only memo misses ---------------- #
     # added pairs live in touched buckets, so their urls are covered by
     # the small in-memory reps frame — no state scan to attach hashes
-    added_h = fence(
-        _attach_hashes(added, url_map=new_reps_members, n_map=n_member_posts)
-    )
+    added_h = _fence(_attach_hashes(added, new_reps_members, n_member_posts))
     n_added = added_h.count()
-    if not has_state:
-        # first ingest: the memo is empty — skip the (corpus-sized)
-        # broadcast probe entirely
-        memo_hits = spark.createDataFrame([], _VERDICTS_SCHEMA)
-        to_verify = added_h
-    else:
-        memo_hits = fence(
-            old_verdicts.join(
-                _maybe_broadcast(
-                    added_h.select("hash_lo", "hash_hi"), n_added
-                ),
-                ["hash_lo", "hash_hi"],
-                "left_semi",
-            )
+    memo_hits = _fence(
+        old_verdicts.join(
+            _maybe_broadcast(added_h.select("hash_lo", "hash_hi"), n_added),
+            ["hash_lo", "hash_hi"],
+            "left_semi",
         )
-        to_verify = fence(
-            added_h.join(memo_hits, ["hash_lo", "hash_hi"], "left_anti")
-        )
-    n_to_verify = to_verify.count()
+    )
+    to_verify = _fence(
+        added_h.join(memo_hits, ["hash_lo", "hash_hi"], "left_anti")
+    )
     if stats_out is not None:
-        stats_out["pairs_verified"] = n_to_verify
         stats_out["old_x_old_reverified"] = (
-            0
-            if not has_state
-            else to_verify.join(
+            to_verify.join(
                 _maybe_broadcast(
                     new_urls.withColumnRenamed("url", "url_a"), n_new
                 ),
@@ -996,32 +953,7 @@ def incremental_dedup(
             )
             .count()
         )
-
-    ver_urls = (
-        to_verify.select(F.col("url_a").alias("url"))
-        .unionByName(to_verify.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
-    ver_texts = new_normed.select("url", "norm_text")
-    if old_normed is not None:
-        # stored norm_text is already the verify window — verify_pairs
-        # re-windows identically, so verdicts match batch bit-for-bit
-        ver_texts = old_normed.select("url", "norm_text").unionByName(ver_texts)
-    ver_texts = ver_texts.join(
-        _maybe_broadcast(ver_urls, 2 * n_to_verify), "url", "left_semi"
-    )
-    # hash keys ride THROUGH the verify UDF stage (verify_pairs
-    # passthrough) — no million-row join-back to recover them
-    new_verdicts = fence(
-        verify_pairs(
-            to_verify.select("url_a", "url_b", "hash_lo", "hash_hi"),
-            ver_texts,
-            pcfg,
-            # ver_texts is semi-join-bounded to <= 2*n_to_verify urls
-            broadcast_texts=2 * n_to_verify <= WINDOW_BCAST_MAX_ROWS,
-        ).select("hash_lo", "hash_hi", "is_dup")
-    )
-    verdicts_all = old_verdicts.unionByName(new_verdicts)
+    new_verdicts = _verify_misses(to_verify, texts, pcfg, stats_out)
 
     # verdicts for the added pairs = the (small) memo hits + this
     # snapshot's fresh verdicts — never a join against the full
@@ -1039,26 +971,10 @@ def incremental_dedup(
     # removed pairs were present => verified at some earlier snapshot,
     # so their verdicts are guaranteed hits in a broadcast-filtered
     # scan of the verdict state
-    removed_h = fence(
-        _attach_hashes(removed, url_map=old_reps_members, n_map=n_member_posts)
+    removed_h = _fence(
+        _attach_hashes(removed, old_reps_members, n_member_posts)
     )
-    removed_dup = fence(
-        removed_h.join(
-            _maybe_broadcast(
-                old_verdicts.join(
-                    _maybe_broadcast(
-                        removed_h.select("hash_lo", "hash_hi"), n_removed
-                    ),
-                    ["hash_lo", "hash_hi"],
-                    "left_semi",
-                ),
-                n_removed,
-            ),
-            ["hash_lo", "hash_hi"],
-        )
-        .where("is_dup")
-        .select("url_a", "url_b")
-    )
+    removed_dup = _fence(_dup_edges(removed_h, old_verdicts, n_removed))
 
     # --- exact-dup edges for the new docs ---------------------------- #
     # same-content docs always share a component; edges to historical
@@ -1078,306 +994,210 @@ def incremental_dedup(
     added_edges = added_dup.unionByName(new_exact)
 
     # --- label-seeded connected components --------------------------- #
-    prior_clusters = catalog.read(spark, "clusters") if has_state else None
-    slim_all = (
-        old_normed.select("url", "content_hash", "n_chars", "warc_ts").unionByName(
-            new_slim.select("url", "content_hash", "n_chars", "warc_ts")
-        )
-        if old_normed is not None
-        else new_slim.select("url", "content_hash", "n_chars", "warc_ts")
-    )
+    prior_clusters = catalog.read(spark, "clusters")
+    prior_labels = prior_clusters.select("url", "cluster_id")
 
-    if prior_clusters is None:
-        if stats_out is not None:
-            stats_out["dissolved_components"] = 0
-        labels = connected_components(added_edges, all_nodes=new_urls)
-        clusters = elect_canonical(labels, slim_all, n_chars_col="n_chars")
-    else:
-        prior_labels = prior_clusters.select("url", "cluster_id")
-
-        n_removed_dup = removed_dup.count()
-        if n_removed_dup:
-            # dissolve every component that relied on a retired pair:
-            # its members become individual nodes and their CURRENT
-            # edges are regathered from the refcount + verdict state
-            rm_urls = (
-                removed_dup.select(F.col("url_a").alias("url"))
-                .unionByName(removed_dup.select(F.col("url_b").alias("url")))
-                .distinct()
-            )
-            dissolved_labels = fence(
-                prior_labels.join(
-                    _maybe_broadcast(rm_urls, 2 * n_removed_dup),
-                    "url",
-                    "left_semi",
-                )
-                .select("cluster_id")
-                .distinct()
-            )
-            n_dis_labels = dissolved_labels.count()
-            # one retired pair incident to a mega-component (boilerplate
-            # / spam cluster with millions of members) makes `dissolved`
-            # arbitrarily large — every use below goes through the
-            # counted broadcast guard, same as the rest of the function
-            dissolved = fence(
-                prior_labels.join(
-                    _maybe_broadcast(dissolved_labels, n_dis_labels),
-                    "cluster_id",
-                    "left_semi",
-                ).select("url")
-            )
-            n_dissolved = dissolved.count()
-            # live dup edges incident to dissolved members: the
-            # post-snapshot logical counts are the persisted state plus
-            # THIS snapshot's (not-yet-persisted) delta, unioned in
-            # memory — the delta only hits disk in the final persist
-            # block so a failed ingest leaves no partial state
-            pc_all = old_pair_cnt.unionByName(
-                changed.select("url_a", "url_b", "d")
-            )
-            inc_pairs = fence(
-                pc_all.join(
-                    _maybe_broadcast(
-                        dissolved.withColumnRenamed("url", "url_a"),
-                        n_dissolved,
-                    ),
-                    "url_a",
-                    "left_semi",
-                )
-                .unionByName(
-                    pc_all.join(
-                        _maybe_broadcast(
-                            dissolved.withColumnRenamed("url", "url_b"),
-                            n_dissolved,
-                        ),
-                        "url_b",
-                        "left_semi",
-                    )
-                )
-                .groupBy("url_a", "url_b")
-                .agg(F.sum("d").alias("tot"))
-                .where("tot > 0")
-                .select("url_a", "url_b")
-            )
-            n_inc = inc_pairs.count()
-            inc_pairs_h = fence(_attach_hashes(inc_pairs, n_pairs=n_inc))
-            m_dup_edges = (
-                inc_pairs_h.join(
-                    _maybe_broadcast(
-                        verdicts_all.join(
-                            _maybe_broadcast(
-                                inc_pairs_h.select("hash_lo", "hash_hi"),
-                                n_inc,
-                            ),
-                            ["hash_lo", "hash_hi"],
-                            "left_semi",
-                        ),
-                        n_inc,
-                    ),
-                    ["hash_lo", "hash_hi"],
-                )
-                .where("is_dup")
-                .select("url_a", "url_b")
-            )
-            # exact-hash stars incident to dissolved members: all docs
-            # sharing a dissolved member's content hash re-star on the
-            # current (min-url) rep
-            dis_hashes = (
-                all_keys.join(
-                    _maybe_broadcast(dissolved, n_dissolved), "url", "left_semi"
-                )
-                .select("content_hash")
-                .distinct()
-            )
-            same_hash_docs = all_keys.join(
-                _maybe_broadcast(dis_hashes, n_dissolved),
-                "content_hash",
+    n_removed_dup = removed_dup.count()
+    if n_removed_dup:
+        # dissolve every component that relied on a retired pair:
+        # its members become individual nodes and their CURRENT
+        # edges are regathered from the refcount + verdict state
+        dissolved_labels = _fence(
+            prior_labels.join(
+                _maybe_broadcast(_endpoints(removed_dup), 2 * n_removed_dup),
+                "url",
                 "left_semi",
             )
-            reps_h = same_hash_docs.groupBy("content_hash").agg(
-                F.min("url").alias("rep_url")
-            )
-            m_exact_edges = (
-                same_hash_docs.join(reps_h, "content_hash")
-                .where(F.col("url") != F.col("rep_url"))
-                .select(
-                    F.col("rep_url").alias("url_a"), F.col("url").alias("url_b")
-                )
-            )
-            graph_edges_raw = added_edges.unionByName(m_dup_edges).unionByName(
-                m_exact_edges
-            )
-        else:
-            dissolved_labels = spark.createDataFrame([], "cluster_id string")
-            dissolved = spark.createDataFrame([], "url string")
-            n_dis_labels = 0
-            graph_edges_raw = added_edges
-        if stats_out is not None:
-            stats_out["dissolved_components"] = n_dis_labels
-
-        # supernode mapping: dissolved members and new docs stand for
-        # themselves; every other endpoint collapses to its prior
-        # component label. Labels are min-member urls, so the small
-        # graph's min-label CC emits exactly the batch labels.
-        own_nodes = fence(
-            dissolved.unionByName(new_urls).distinct().withColumn(
-                "own", F.lit(True)
-            )
-        )
-        n_own = own_nodes.count()
-        ep_urls = fence(
-            graph_edges_raw.select(F.col("url_a").alias("url"))
-            .unionByName(graph_edges_raw.select(F.col("url_b").alias("url")))
+            .select("cluster_id")
             .distinct()
         )
-        n_eps = ep_urls.count()
-        ep_labels = prior_labels.join(
-            _maybe_broadcast(ep_urls, n_eps), "url", "left_semi"
+        n_dis_labels = dissolved_labels.count()
+        # one retired pair incident to a mega-component (boilerplate
+        # / spam cluster with millions of members) makes `dissolved`
+        # arbitrarily large — every use below goes through the
+        # counted broadcast guard, same as the rest of the function
+        dissolved = _fence(
+            prior_labels.join(
+                _maybe_broadcast(dissolved_labels, n_dis_labels),
+                "cluster_id",
+                "left_semi",
+            ).select("url")
         )
-        ep_map = fence(
-            ep_urls.join(own_nodes, "url", "left")
-            .join(ep_labels, "url", "left")
-            .select(
-                "url",
-                F.coalesce("own", F.lit(False)).alias("own"),
-                F.when(F.coalesce("own", F.lit(False)), F.col("url"))
-                .otherwise(F.coalesce("cluster_id", F.col("url")))
-                .alias("node"),
-            )
-        )
-        graph_edges = (
-            graph_edges_raw.join(
-                ep_map.select(
-                    F.col("url").alias("url_a"), F.col("node").alias("node_a")
+        n_dissolved = dissolved.count()
+        # live dup edges incident to dissolved members: the
+        # post-snapshot logical counts are the persisted state plus
+        # THIS snapshot's (not-yet-persisted) delta, unioned in
+        # memory — the delta only hits disk in _persist so a failed
+        # ingest leaves no partial state
+        pc_all = old_pair_cnt.unionByName(changed.select("url_a", "url_b", "d"))
+        inc_pairs = _fence(
+            pc_all.join(
+                _maybe_broadcast(
+                    dissolved.withColumnRenamed("url", "url_a"), n_dissolved
                 ),
                 "url_a",
+                "left_semi",
             )
-            .join(
-                ep_map.select(
-                    F.col("url").alias("url_b"), F.col("node").alias("node_b")
-                ),
-                "url_b",
+            .unionByName(
+                pc_all.join(
+                    _maybe_broadcast(
+                        dissolved.withColumnRenamed("url", "url_b"),
+                        n_dissolved,
+                    ),
+                    "url_b",
+                    "left_semi",
+                )
             )
-            .where(F.col("node_a") != F.col("node_b"))
-            .select(
-                F.col("node_a").alias("url_a"), F.col("node_b").alias("url_b")
-            )
+            .groupBy("url_a", "url_b")
+            .agg(F.sum("d").alias("tot"))
+            .where("tot > 0")
+            .select("url_a", "url_b")
         )
-        small_nodes = (
-            own_nodes.select("url")
-            .unionByName(ep_map.select(F.col("node").alias("url")))
+        n_inc = inc_pairs.count()
+        # a state scan of (url, content_hash) filtered by the pairs'
+        # urls — broadcast only when 2 * n_inc bounds them under the
+        # cap (a retired pair incident to a mega-component can make
+        # this set arbitrarily large)
+        inc_map = all_keys.join(
+            _maybe_broadcast(_endpoints(inc_pairs), 2 * n_inc), "url", "left_semi"
+        )
+        inc_pairs_h = _fence(_attach_hashes(inc_pairs, inc_map, 2 * n_inc))
+        m_dup_edges = _dup_edges(
+            inc_pairs_h, old_verdicts.unionByName(new_verdicts), n_inc
+        )
+        # exact-hash stars incident to dissolved members: all docs
+        # sharing a dissolved member's content hash re-star on the
+        # current (min-url) rep
+        dis_hashes = (
+            all_keys.join(
+                _maybe_broadcast(dissolved, n_dissolved), "url", "left_semi"
+            )
+            .select("content_hash")
             .distinct()
         )
-        cc_small = fence(connected_components(graph_edges, all_nodes=small_nodes))
+        same_hash_docs = all_keys.join(
+            _maybe_broadcast(dis_hashes, n_dissolved),
+            "content_hash",
+            "left_semi",
+        )
+        m_exact_edges, _ = exact_dedup(same_hash_docs, hash_col="content_hash")
+        graph_edges_raw = added_edges.unionByName(m_dup_edges).unionByName(
+            m_exact_edges
+        )
+    else:
+        dissolved_labels = spark.createDataFrame([], "cluster_id string")
+        dissolved = spark.createDataFrame([], "url string")
+        n_dis_labels = 0
+        graph_edges_raw = added_edges
+    if stats_out is not None:
+        stats_out["dissolved_components"] = n_dis_labels
 
-        # affected prior components: dissolved ones, plus every intact
-        # component that appeared as a supernode (it may have merged,
-        # gained members, or changed label) — their rows are dropped
-        # and re-elected; everything else carries over untouched
-        supernode_labels = (
-            ep_map.where(~F.col("own"))
-            .select(F.col("node").alias("cluster_id"))
-            .distinct()
+    # supernode mapping: dissolved members and new docs stand for
+    # themselves; every other endpoint collapses to its prior
+    # component label. Labels are min-member urls, so the small
+    # graph's min-label CC emits exactly the batch labels.
+    own_nodes = _fence(
+        dissolved.unionByName(new_urls).distinct().withColumn(
+            "own", F.lit(True)
         )
-        affected_labels = fence(
-            supernode_labels.unionByName(dissolved_labels).distinct()
+    )
+    n_own = own_nodes.count()
+    ep_urls = _fence(_endpoints(graph_edges_raw))
+    n_eps = ep_urls.count()
+    ep_labels = prior_labels.join(
+        _maybe_broadcast(ep_urls, n_eps), "url", "left_semi"
+    )
+    ep_map = _fence(
+        ep_urls.join(own_nodes, "url", "left")
+        .join(ep_labels, "url", "left")
+        .select(
+            "url",
+            F.coalesce("own", F.lit(False)).alias("own"),
+            F.when(F.coalesce("own", F.lit(False)), F.col("url"))
+            .otherwise(F.coalesce("cluster_id", F.col("url")))
+            .alias("node"),
         )
-
-        own_rows = cc_small.join(
-            _maybe_broadcast(own_nodes.select("url"), n_own), "url", "left_semi"
-        )
-        label_moves = cc_small.join(
-            _maybe_broadcast(
-                supernode_labels.withColumnRenamed("cluster_id", "url"), n_eps
+    )
+    graph_edges = (
+        graph_edges_raw.join(
+            ep_map.select(
+                F.col("url").alias("url_a"), F.col("node").alias("node_a")
             ),
+            "url_a",
+        )
+        .join(
+            ep_map.select(
+                F.col("url").alias("url_b"), F.col("node").alias("node_b")
+            ),
+            "url_b",
+        )
+        .where(F.col("node_a") != F.col("node_b"))
+        .select(
+            F.col("node_a").alias("url_a"), F.col("node_b").alias("url_b")
+        )
+    )
+    small_nodes = (
+        own_nodes.select("url")
+        .unionByName(ep_map.select(F.col("node").alias("url")))
+        .distinct()
+    )
+    cc_small = _fence(connected_components(graph_edges, all_nodes=small_nodes))
+
+    # affected prior components: dissolved ones, plus every intact
+    # component that appeared as a supernode (it may have merged,
+    # gained members, or changed label) — their rows are dropped
+    # and re-elected; everything else carries over untouched
+    supernode_labels = (
+        ep_map.where(~F.col("own"))
+        .select(F.col("node").alias("cluster_id"))
+        .distinct()
+    )
+    affected_labels = _fence(
+        supernode_labels.unionByName(dissolved_labels).distinct()
+    )
+
+    own_rows = cc_small.join(
+        _maybe_broadcast(own_nodes.select("url"), n_own), "url", "left_semi"
+    )
+    label_moves = cc_small.join(
+        _maybe_broadcast(
+            supernode_labels.withColumnRenamed("cluster_id", "url"), n_eps
+        ),
+        "url",
+        "left_semi",
+    ).select(
+        F.col("url").alias("old_label"), F.col("cluster_id").alias("new_label")
+    )
+    intact_rows = (
+        prior_labels.withColumnRenamed("cluster_id", "old_label")
+        .join(_maybe_broadcast(label_moves, n_eps), "old_label")
+        .select("url", F.col("new_label").alias("cluster_id"))
+        # a dissolved member's prior row must not resurface through
+        # an intact-component relabel (disjoint by construction —
+        # dissolved components are never supernodes — but keep the
+        # guard cheap and explicit)
+        .join(
+            _maybe_broadcast(own_nodes.select("url"), n_own),
             "url",
-            "left_semi",
-        ).select(
-            F.col("url").alias("old_label"), F.col("cluster_id").alias("new_label")
-        )
-        intact_rows = (
-            prior_labels.withColumnRenamed("cluster_id", "old_label")
-            .join(_maybe_broadcast(label_moves, n_eps), "old_label")
-            .select("url", F.col("new_label").alias("cluster_id"))
-            # a dissolved member's prior row must not resurface through
-            # an intact-component relabel (disjoint by construction —
-            # dissolved components are never supernodes — but keep the
-            # guard cheap and explicit)
-            .join(
-                _maybe_broadcast(own_nodes.select("url"), n_own),
-                "url",
-                "left_anti",
-            )
-        )
-        affected_members = fence(own_rows.unionByName(intact_rows))
-        n_aff = affected_members.count()
-        aff_slim = slim_all.join(
-            _maybe_broadcast(affected_members.select("url"), n_aff),
-            "url",
-            "left_semi",
-        )
-        aff_clusters = elect_canonical(
-            affected_members, aff_slim, n_chars_col="n_chars"
-        )
-        untouched = prior_clusters.join(
-            _maybe_broadcast(affected_labels, n_eps + n_dis_labels),
-            "cluster_id",
             "left_anti",
         )
-        clusters = untouched.select(
-            "url", "cluster_id", "is_canonical"
-        ).unionByName(aff_clusters.select("url", "cluster_id", "is_canonical"))
-
-    # --- persist state deltas + full clusters output ----------------- #
-    # ALL state deltas land here, together, after every failure-prone
-    # stage (verify, CC, election) has completed — `changed` included,
-    # so a re-run after a mid-ingest failure starts from clean state
-    # (the duplicate-url guard then correctly rejects or accepts the
-    # whole snapshot; refcounts can never be half-applied). A death
-    # INSIDE this block is the one window the compute-then-persist
-    # ordering cannot cover — the journal marker brackets it, turning
-    # would-be silent corruption into a loud torn-state refusal.
-    catalog.journal_begin(ingest_id, {"leg": "delta"})
-    if has_state:
-        catalog.append(new_sigs, "sigs")
-        catalog.append(new_slim, "normed")
-        catalog.append(new_verdicts, "verdicts")
-        catalog.append(changed, "pair_cnt")
-    else:
-        catalog.write(new_sigs, "sigs", bucket_by=_bspec("sigs", state_buckets))
-        catalog.write(
-            new_slim, "normed", bucket_by=_bspec("normed", state_buckets)
-        )
-        catalog.write(
-            new_verdicts,
-            "verdicts",
-            bucket_by=_bspec("verdicts", state_buckets),
-        )
-        catalog.write(changed, "pair_cnt")
-    catalog.write(clusters, "clusters")
-    # commit before compaction — compaction's writes are individually
-    # crash-atomic re-layouts outside the multi-table transaction
-    catalog.journal_commit(ingest_id)
-
-    # bound the delta chains (read_all unions every delta since the
-    # last full snapshot; unbounded chains grow listing + scan cost).
-    # pair_cnt compacts to its aggregated running sums — zero-sum pairs
-    # drop out (an absent pair reads as count 0, identically).
-    if compact_every:
-        for table in ("sigs", "normed", "verdicts"):
-            catalog.maybe_compact(
-                spark,
-                table,
-                max_deltas=compact_every,
-                bucket_by=_bspec(table, state_buckets),
-            )
-        catalog.maybe_compact(
-            spark,
-            "pair_cnt",
-            max_deltas=compact_every,
-            transform=lambda df: df.groupBy("url_a", "url_b")
-            .agg(F.sum("d").cast("int").alias("d"))
-            .where("d != 0"),
-        )
-
-    return catalog.read(spark, "clusters")
+    )
+    affected_members = _fence(own_rows.unionByName(intact_rows))
+    n_aff = affected_members.count()
+    aff_slim = slim_all.join(
+        _maybe_broadcast(affected_members.select("url"), n_aff),
+        "url",
+        "left_semi",
+    )
+    aff_clusters = elect_canonical(
+        affected_members, aff_slim, n_chars_col="n_chars"
+    )
+    untouched = prior_clusters.join(
+        _maybe_broadcast(affected_labels, n_eps + n_dis_labels),
+        "cluster_id",
+        "left_anti",
+    )
+    clusters = untouched.select(
+        "url", "cluster_id", "is_canonical"
+    ).unionByName(aff_clusters.select("url", "cluster_id", "is_canonical"))
+    return persist("delta", new_verdicts, changed, clusters)

@@ -91,7 +91,9 @@ def dedup_stream(
     drains the current directory contents and terminates, the
     batch-backfill trigger. ``dedup_kwargs`` pass through to
     ``incremental_dedup`` (``batch_cutover_frac``, ``state_buckets``,
-    ``compact_every``...).
+    ``compact_every``...). The first micro-batch into an empty catalog
+    always takes the batch leg; ``batch_cutover_frac`` routes the
+    later ones (``None``: every later micro-batch takes the delta leg).
 
     At cluster scale the same wiring points at an object-store prefix
     or Kafka source; the catalog becomes an Iceberg catalog (the
