@@ -826,17 +826,26 @@ def test_incremental_mixed_mode_sequence_matches_batch(spark, tmp_path):
     assert cat.deltas_since_full("sigs") <= 2
 
 
-def test_incremental_legs_write_equal_state(spark, tmp_path):
-    """Both legs verify and persist through the same steps: after the
-    same two snapshots, a catalog whose second ingest took the delta
-    leg and one whose second ingest took the cutover hold the same
-    sigs and normed rows, the same logical pair refcounts and the same
-    clusters, and each has a verdict for every current pair. The
-    shuffled order and tiny bucket cap make the delta leg retire pairs
-    and recount over-cap buckets."""
-    import random
+def _rows(df):
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
 
+
+def _pair_sums(spark, cat):
+    """Logical pair refcounts (url_a, url_b, d) of a catalog."""
     from pyspark.sql import functions as F
+
+    return _rows(
+        cat.read_all(spark, "pair_cnt")
+        .groupBy("url_a", "url_b")
+        .agg(F.sum("d").alias("d"))
+        .where("d != 0")
+    )
+
+
+def _ingest_seed13(spark, root, frac):
+    """The same two snapshots (shuffled seed-13 corpus, bucket cap 2)
+    into a fresh catalog at ``root``; returns (catalog, last mode)."""
+    import random
 
     from fixtures.gen import gen_corpus
     from ufuzzy_spark.catalog import LocalParquetCatalog
@@ -846,39 +855,34 @@ def test_incremental_legs_write_equal_state(spark, tmp_path):
     pcfg = PipelineConfig(max_bucket_size=2, salt_buckets=2)
     pages, _ = gen_corpus(300, seed=13, label_pairs=False)
     random.Random(1301).shuffle(pages)
-    snaps = [pages[:200], pages[200:]]
+    cat = LocalParquetCatalog(root)
+    for snap in (pages[:200], pages[200:]):
+        stats: dict = {}
+        incremental_dedup(
+            spark, cat, spark.createDataFrame(snap), pcfg=pcfg,
+            stats_out=stats, batch_cutover_frac=frac,
+        )
+    return cat, stats["mode"]
 
-    def ingest(name, frac):
-        cat = LocalParquetCatalog(tmp_path / name)
-        for snap in snaps:
-            stats: dict = {}
-            incremental_dedup(
-                spark, cat, spark.createDataFrame(snap), pcfg=pcfg,
-                stats_out=stats, batch_cutover_frac=frac,
-            )
-        return cat, stats["mode"]
 
-    delta, delta_mode = ingest("delta", None)
-    cut, cut_mode = ingest("cut", 0.0)
+def test_incremental_legs_write_equal_state(spark, tmp_path):
+    """Both legs verify and persist through the same steps: after the
+    same two snapshots, a catalog whose second ingest took the delta
+    leg and one whose second ingest took the cutover hold the same
+    sigs and normed rows, the same logical pair refcounts and the same
+    clusters, and each has a verdict for every current pair. The
+    shuffled order and tiny bucket cap make the delta leg retire pairs
+    and recount over-cap buckets."""
+    delta, delta_mode = _ingest_seed13(spark, tmp_path / "delta", None)
+    cut, cut_mode = _ingest_seed13(spark, tmp_path / "cut", 0.0)
     assert (delta_mode, cut_mode) == ("delta", "batch_recompute")
 
-    def rows(df):
-        return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
-
-    def pair_sums(cat):
-        return rows(
-            cat.read_all(spark, "pair_cnt")
-            .groupBy("url_a", "url_b")
-            .agg(F.sum("d").alias("d"))
-            .where("d != 0")
-        )
-
     for table in ("sigs", "normed"):
-        assert rows(delta.read_all(spark, table)) == rows(
+        assert _rows(delta.read_all(spark, table)) == _rows(
             cut.read_all(spark, table)
         ), table
-    assert pair_sums(delta) == pair_sums(cut)
-    assert rows(delta.read(spark, "clusters")) == rows(cut.read(spark, "clusters"))
+    assert _pair_sums(spark, delta) == _pair_sums(spark, cut)
+    assert _rows(delta.read(spark, "clusters")) == _rows(cut.read(spark, "clusters"))
 
     for cat in (delta, cut):
         url_hash = dict(
@@ -888,9 +892,36 @@ def test_incremental_legs_write_equal_state(spark, tmp_path):
             (r.hash_lo, r.hash_hi)
             for r in cat.read_all(spark, "verdicts").collect()
         }
-        for _d, url_a, url_b in pair_sums(cat):  # columns sorted by name
+        for _d, url_a, url_b in _pair_sums(spark, cat):  # columns sorted by name
             ha, hb = url_hash[url_a], url_hash[url_b]
             assert (min(ha, hb), max(ha, hb)) in judged, (url_a, url_b)
+
+
+def test_incremental_plain_joins_write_equal_state(spark, tmp_path, monkeypatch):
+    """The ingest path past the broadcast budget, which test-sized data
+    never reaches: with ``BCAST_MAX_BYTES`` below every guarded side
+    (-1: empty sides included) and Spark's own size-based broadcast
+    off, every ingest join plans sort-merge. The same two snapshots
+    (batch leg, then delta leg) must write the same state as with the
+    default budget."""
+    import ufuzzy_spark.session as session
+
+    bcast, bcast_mode = _ingest_seed13(spark, tmp_path / "bcast", None)
+    monkeypatch.setattr(session, "BCAST_MAX_BYTES", -1)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plain, plain_mode = _ingest_seed13(spark, tmp_path / "plain", None)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert bcast_mode == plain_mode == "delta"
+
+    for table in ("sigs", "normed", "verdicts"):
+        assert _rows(bcast.read_all(spark, table)) == _rows(
+            plain.read_all(spark, table)
+        ), table
+    assert _pair_sums(spark, bcast) == _pair_sums(spark, plain)
+    assert _rows(bcast.read(spark, "clusters")) == _rows(plain.read(spark, "clusters"))
 
 
 def test_pair_features_counters_match_oracle(spark):

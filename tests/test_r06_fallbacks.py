@@ -1,16 +1,18 @@
 """Parity pins for the r06 chain-rewrite fallback paths.
 
-q_ngram_jaccard / q_verify_pairs_native use guarded broadcasts of
-per-doc profile frames when the corpus is small, and fall back to the
-skinny posting-join shapes above ``_BCAST_MAX_ROWS`` docs. Testdata
-never crosses the threshold, so the fallback shapes are pinned here by
-forcing the threshold to 0 and comparing against the broadcast path.
+q_ngram_jaccard / q_verify_pairs_native / q_pair_features use guarded
+broadcasts of per-doc frames while they fit the one broadcast budget
+(``session.BCAST_MAX_BYTES``), and fall back to the skinny posting-join
+and plain-join shapes above it. Testdata never crosses the budget, so
+the fallback shapes are pinned here by forcing the budget below every
+``n_rows x row_bytes`` and comparing against the broadcast path.
 """
 
 import pandas as pd
 import pytest
 
 import ufuzzy_spark.entry_queries as eq
+import ufuzzy_spark.session as session
 
 SF = "/root/testdata/sf0.01"
 
@@ -29,8 +31,7 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 def test_fallback_path_matches_broadcast_path(spark, monkeypatch, qname):
     fn = eq.queries()[qname]
     fast = fn(spark, SF).toPandas()
-    monkeypatch.setattr(eq, "_BCAST_MAX_ROWS", 0)
-    monkeypatch.setattr(eq, "_BCAST_MAX_ARR_ROWS", 0)
+    monkeypatch.setattr(session, "BCAST_MAX_BYTES", -1)
     slow = fn(spark, SF).toPandas()
     pd.testing.assert_frame_equal(_canon(fast), _canon(slow))
 

@@ -21,6 +21,10 @@ from dataclasses import asdict, dataclass, field
 
 _INF = math.inf
 
+# Languages the dedup pipeline takes in; batch (run_pipeline) and
+# incremental ingest read the same tuple, so their clusters agree.
+DEDUP_LANGS: tuple[str, ...] = ("en",)
+
 
 @dataclass(frozen=True)
 class MatchConfig:
@@ -110,7 +114,6 @@ class PipelineConfig:
     bag_num_perm: int = 32
     bag_bands: int = 4
     bag_rows: int = 8
-    simhash_bits: int = 64
     simhash_max_hamming: int = 3
     # bumped when the persisted signature-stage layout changes (r3:
     # band hashes folded in the UDF; the "signatures" checkpoint is now
@@ -120,7 +123,6 @@ class PipelineConfig:
     # candidate generation hygiene
     max_bucket_size: int = 200         # bigger buckets -> overflow path
     salt_buckets: int = 8              # salt fan-out for hot band keys
-    max_candidates_per_doc: int = 500
     # verification
     verify_window_chars: int = 512     # needle window from doc A
     verify_min_term_frac: float = 0.8  # θ: fraction of window terms that

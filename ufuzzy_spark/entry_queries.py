@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ufuzzy_spark.config import MatchConfig
 from ufuzzy_spark.latinize import ACCENT_DST, ACCENT_SRC
 from ufuzzy_spark.oracle import UFuzzyOracle
+from ufuzzy_spark.session import broadcast_if_fits, fits_broadcast
 
 # ---------------------------------------------------------------- #
 # shared helpers
@@ -83,13 +84,18 @@ def release_shared(spark: SparkSession, sf_dir: str | None = None) -> None:
     _drop(app, lambda k: sf_dir is None or k[1] == sf_dir)
 
 
-def _table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Session-resident ``{sf_dir}/{name}.parquet``, partitioned on ``key``."""
+def _resident(spark: SparkSession, sf_dir: str, name: str, key: str):
+    """Session-resident ``{sf_dir}/{name}.parquet``, partitioned on
+    ``key``; returns (df, n_rows)."""
     def build():
         n = spark.sparkContext.defaultParallelism * 2
         return spark.read.parquet(f"{sf_dir}/{name}.parquet").repartition(n, key)
 
-    return _shared(spark, sf_dir, name, build, table=name)[0]
+    return _shared(spark, sf_dir, name, build, table=name)
+
+
+def _table(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
+    return _resident(spark, sf_dir, name, key)[0]
 
 
 def h60(col: Column) -> Column:
@@ -639,24 +645,9 @@ def q_exact_dedup(spark, sf_dir):
 # 5. minhash signatures (md5-parity family; SURVEY §2 #13 analog)
 # ---------------------------------------------------------------- #
 
-# Guarded broadcast (the incremental.py `_maybe_broadcast` rule: never
-# bare-broadcast a data-dependent frame). Per-doc profile frames are
-# ~1.5 KB/doc, so 500k rows stays well under the 8 GB broadcast cap;
-# beyond it callers fall back to the skinny-row posting-join shape.
-_BCAST_MAX_ROWS = 500_000
-
-# Tighter bound for the FAT per-doc payloads (the distinct-shingle
-# arrays: ~300 strings ≈ 4.6 KB/row as an unsafe array, built TWICE —
-# one relation per join side): 150k rows keeps both built relations
-# ~1.5 GB together; above it the jaccard falls back to the posting
-# join, which is also the right plan at that size (only skinny rows
-# ever shuffle).
-_BCAST_MAX_ARR_ROWS = 150_000
-
-
-def _bcast_if_small(df: DataFrame, n_rows: int) -> DataFrame:
-    return F.broadcast(df) if n_rows <= _BCAST_MAX_ROWS else df
-
+# bytes per doc of the broadcast shingle arrays (3,363 measured at
+# sf0.1: ~300 distinct 5-grams per doc)
+_SHARR_ROW_BYTES = 3_400
 
 # per-doc DISTINCT shingle set as an array: explode + global DISTINCT
 # collapses to array_distinct because shingles are dedup'd WITHIN a
@@ -857,8 +848,9 @@ _JACCARD_SQL = f"""
 def q_ngram_jaccard(spark, sf_dir):
     """Exact pairwise shingle Jaccard over the candidate pairs.
 
-    Small/medium corpora (<= _BCAST_MAX_ROWS docs): broadcast the
-    per-doc shingle arrays to both sides of the pair table and compute
+    Corpora whose shingle arrays fit the broadcast budget: broadcast
+    the per-doc shingle arrays to both sides of the pair table (one
+    built relation, reused by the second side) and compute
     |A ∩ B| with array_intersect in one codegen stage — the pre-r06
     shape expanded cands x shingles(id_a) (19.5M x ~300 = 5.8e9 rows
     at sf1.0) and shuffled that by (id_b, shingle) before a pair-key
@@ -870,9 +862,9 @@ def q_ngram_jaccard(spark, sf_dir):
 
 
 def _jaccard_df(spark, sf_dir, size_ratio_floor: float | None = None):
-    """Jaccard per candidate pair; broadcast shape when the corpus is
-    small, posting join above _BCAST_MAX_ARR_ROWS docs (the shingle
-    arrays are the fat payload — see the guard's comment).
+    """Jaccard per candidate pair; broadcast shape while the shingle
+    arrays (~3.4 KB/doc measured, the fat payload) fit
+    ``session.fits_broadcast``, posting join above it.
 
     ``size_ratio_floor``: consumers that immediately filter
     ``jaccard >= tau`` (the near-dup edge builders) pass a SAFE
@@ -886,13 +878,18 @@ def _jaccard_df(spark, sf_dir, size_ratio_floor: float | None = None):
     so the >= tau edge set is IDENTICAL."""
     cands, _ = _cands(spark, sf_dir)
     arrs, n_docs = _sharr(spark, sf_dir)
-    if n_docs <= _BCAST_MAX_ARR_ROWS:
-        a = F.broadcast(
-            arrs.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sha"))
+    if fits_broadcast(n_docs, _SHARR_ROW_BYTES):
+        # one built relation for both sides: under AQE two broadcasts
+        # of a persisted frame each wrap their own table-cache stage,
+        # so neither reuses the other and the arrays are built twice.
+        # Over one RDD-backed frame (a JVM-side Row round trip of the
+        # cached arrays) the second side is a ReusedExchange.
+        side = DataFrame(
+            spark._jsparkSession.createDataFrame(arrs._jdf.rdd(), arrs._jdf.schema()),
+            spark,
         )
-        b = F.broadcast(
-            arrs.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("shb"))
-        )
+        a = broadcast_if_fits(side.toDF("id_a", "sha"), n_docs, _SHARR_ROW_BYTES)
+        b = broadcast_if_fits(side.toDF("id_b", "shb"), n_docs, _SHARR_ROW_BYTES)
         j = cands.join(a, "id_a").join(b, "id_b")
         if size_ratio_floor is not None:
             # exact integer compare: keep iff min*SCALE >= floor*SCALE*max
@@ -920,8 +917,8 @@ def _jaccard_df(spark, sf_dir, size_ratio_floor: float | None = None):
 
 
 def _jaccard_posting_join(spark, sf_dir, cands) -> DataFrame:
-    """Posting-join Jaccard — the >500k-doc shape: only skinny
-    (pair_key, shingle) rows are shuffled, never doc payloads."""
+    """Posting-join Jaccard — the shape past the broadcast budget: only
+    skinny (pair_key, shingle) rows are shuffled, never doc payloads."""
     sh = _shingles_df(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     sa = sh.select(F.col("doc_id").alias("id_a"), "shingle")
@@ -998,7 +995,7 @@ def q_verify_pairs_native(spark, sf_dir):
     verifier in operators/verify.py (the one used for every config)
     keeps split()'s quoted "..." spans as terms."""
     cands, _ = _cands(spark, sf_dir)
-    d = _table(spark, sf_dir, "documents", "doc_id")
+    d, n_docs = _resident(spark, sf_dir, "documents", "doc_id")
     d = d.select("doc_id", norm_col().alias("norm"))
 
     # per-doc profile: distinct window terms as an array + the scan
@@ -1018,22 +1015,18 @@ def q_verify_pairs_native(spark, sf_dir):
         ).alias("terms"),
         F.substring("norm", 1, _VSCAN).alias("scan"),
     )
-    _, n_docs = _sharr(spark, sf_dir)
-    pa = _bcast_if_small(
-        prof.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("terms").alias("terms_a"),
-            F.col("scan").alias("scan_a"),
-        ),
-        n_docs,
-    )
-    pb = _bcast_if_small(
-        prof.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("terms").alias("terms_b"),
-            F.col("scan").alias("scan_b"),
-        ),
-        n_docs,
+    # two built relations of ~850 B/row each (measured at sf0.1)
+    pa, pb = (
+        broadcast_if_fits(
+            prof.select(
+                F.col("doc_id").alias(f"id_{s}"),
+                F.col("terms").alias(f"terms_{s}"),
+                F.col("scan").alias(f"scan_{s}"),
+            ),
+            n_docs,
+            2 * 900,
+        )
+        for s in "ab"
     )
     hit_a = F.size(
         F.filter("terms_a", lambda t: F.instr(F.col("scan_b"), t) > 0)
@@ -1376,26 +1369,25 @@ def q_pair_features(spark, sf_dir):
     the gate is a genuine cross-implementation differential."""
     from ufuzzy_spark.config import PipelineConfig
     from ufuzzy_spark.operators.pair_features import pair_features
+    from ufuzzy_spark.operators.verify import WINDOW_ATTACH_ROW_BYTES
 
     cands_df, _ = _cands(spark, sf_dir)
     cands = cands_df.select(
         F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b")
     )
-    normed = _table(spark, sf_dir, "documents", "doc_id").select(
-        F.col("doc_id").alias("url"), norm_col().alias("norm_text")
-    )
+    docs, n_docs = _resident(spark, sf_dir, "documents", "doc_id")
+    normed = docs.select(F.col("doc_id").alias("url"), norm_col().alias("norm_text"))
     # broadcast the per-doc window texts (guarded): the pair table is
     # ~400x the corpus at sf1.0 (19.5M pairs / 50k docs), so the old
     # sort-merge text joins shuffled the pair table twice — the second
     # time carrying a 1 KB window per row (guide §8: attach payloads
     # without re-shuffling the big side)
-    _, n_docs = _sharr(spark, sf_dir)
     feats = pair_features(
         cands,
         normed,
         PipelineConfig(),
         needle_terms=1,
-        broadcast_texts=n_docs <= _BCAST_MAX_ROWS,
+        broadcast_texts=fits_broadcast(n_docs, WINDOW_ATTACH_ROW_BYTES),
     )
     return feats.select(
         F.col("url_a").alias("id_a"),
@@ -2339,8 +2331,9 @@ def q_tpch_top_suppliers(spark, sf_dir):
         )
     )
     top = global_rank_asc(rev, ["neg_rev", "s_suppkey"], 10)
+    # the 10-row top-k is the broadcast side; supplier grows with SF
     return (
-        top.join(F.broadcast(supp), "s_suppkey")
+        supp.join(F.broadcast(top), "s_suppkey")
         .select(
             "s_suppkey",
             "s_name",
@@ -2904,7 +2897,7 @@ def q_embedding_near_dup(spark, sf_dir):
     keys; the all-pairs cosine exists only inside a bucket."""
     from ufuzzy_spark.operators.components import connected_components
 
-    e = _table(spark, sf_dir, "embeddings", "vec_id")
+    e, n_embs = _resident(spark, sf_dir, "embeddings", "vec_id")
     buckets = _srp_buckets_df(spark, e)
     cand = (
         buckets.select(F.col("vec_id").alias("ia"), "bkt")
@@ -2919,13 +2912,16 @@ def q_embedding_near_dup(spark, sf_dir):
     # attach embeddings to the pair table via guarded broadcast (r06):
     # candidate pairs outnumber vectors by orders of magnitude inside
     # dense SRP buckets, so the two sort-merge attach joins shuffled
-    # the pair table twice (guide §8); vectors are ~300 B/row, so the
-    # 500k guard keeps the built relation ~150 MB
-    n_embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    xe = e.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("xe"))
-    ye = e.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("ye"))
-    if n_embs <= _BCAST_MAX_ROWS:
-        xe, ye = F.broadcast(xe), F.broadcast(ye)
+    # the pair table twice (guide §8); two built relations of ~380
+    # B/row each (float[64] + id, measured)
+    xe, ye = (
+        broadcast_if_fits(
+            e.select(F.col("vec_id").alias(i), F.col("embedding").alias(v)),
+            n_embs,
+            2 * 400,
+        )
+        for i, v in (("ia", "xe"), ("ib", "ye"))
+    )
     edges = (
         cand.join(xe, "ia")
         .join(ye, "ib")

@@ -137,12 +137,10 @@ def pair_features(
 
     The windows are attached exactly as ``verify_pairs`` attaches them.
 
-    ``broadcast_texts``: callers that KNOW the corpus side is small
-    (e.g. the entry queries, where the pair table is orders of
-    magnitude larger than the doc table) can broadcast the window
-    texts so the pair table is never shuffled by the two attach joins.
-    Off by default — ``normed`` is data-dependent and production
-    callers must opt in deliberately.
+    ``broadcast_texts``: as in ``verify_pairs``, callers that have
+    counted ``normed`` pass ``session.fits_broadcast(n,
+    WINDOW_ATTACH_ROW_BYTES)``, so the pair table is never shuffled by
+    the two attach joins. Off by default: ``normed`` is data-dependent.
     """
     pcfg = pcfg or PipelineConfig()
     joined = _attach_windows(pairs, normed, pcfg, broadcast_texts)

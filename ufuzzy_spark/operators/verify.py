@@ -87,9 +87,10 @@ def make_verify_udf(pcfg: PipelineConfig):
     return verify_udf
 
 
-# Largest text side (rows) a caller may broadcast into the window
-# attach: each row carries a ~1 KB window (2 x verify_window_chars).
-WINDOW_BCAST_MAX_ROWS = 500_000
+# Bytes per text row that a broadcast window attach builds: the url_a
+# and url_b sides are two relations unless the planner reuses one,
+# each ~1,043 B/row measured (url + the 2 x verify_window_chars window).
+WINDOW_ATTACH_ROW_BYTES = 2 * 1_100
 
 
 def _attach_windows(
@@ -135,10 +136,9 @@ def verify_pairs(
     so the two attach joins otherwise shuffle the pair table twice —
     by url_a, then again by url_b (guide §8: the attach join sneaks
     the payload shuffle back in). Callers that have COUNTED the text
-    side opt in when it is at most ``WINDOW_BCAST_MAX_ROWS`` rows.
-    Off by default: ``normed`` is data-dependent and a bare broadcast
-    of an unbounded frame is the incremental.py `_maybe_broadcast`
-    anti-pattern.
+    side pass ``session.fits_broadcast(n, WINDOW_ATTACH_ROW_BYTES)``.
+    Off by default: ``normed`` is data-dependent, and an unguarded
+    broadcast of an unbounded frame can exhaust the driver.
     """
     pcfg = pcfg or PipelineConfig()
     joined = _attach_windows(pairs, normed, pcfg, broadcast_texts)

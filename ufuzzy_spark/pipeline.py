@@ -24,13 +24,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ufuzzy_spark.config import PipelineConfig
+from ufuzzy_spark.config import DEDUP_LANGS, PipelineConfig
 from ufuzzy_spark.operators.components import connected_components, elect_canonical
 from ufuzzy_spark.operators.dedup import exact_dedup
 from ufuzzy_spark.operators.lsh import candidate_pairs, postings_from_band_hashes
 from ufuzzy_spark.operators.minhash import banded_signatures
 from ufuzzy_spark.operators.normalize import normalize
-from ufuzzy_spark.operators.verify import WINDOW_BCAST_MAX_ROWS, verify_pairs
+from ufuzzy_spark.operators.verify import WINDOW_ATTACH_ROW_BYTES, verify_pairs
+from ufuzzy_spark.session import fits_broadcast
 
 
 @dataclass
@@ -40,7 +41,6 @@ class PipelineResult:
     candidate_pairs: DataFrame
     substring_pairs: DataFrame | None = None  # long exact-substring dupes
     metrics: dict = field(default_factory=dict)
-    pair_features: DataFrame | None = None    # full Info counters per dup pair
     _persisted: list = field(default_factory=list, repr=False)
 
     def unpersist(self) -> None:
@@ -60,12 +60,10 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     pcfg: PipelineConfig | None = None,
-    include_langs: tuple[str, ...] = ("en",),
     checkpoint_dir: str | None = None,
     resume: bool = True,
     include_substring_pairs: bool = False,
     use_simhash_candidates: bool = False,
-    include_pair_features: bool = False,
 ) -> PipelineResult:
     from ufuzzy_spark.lineage import StageRunner
 
@@ -83,7 +81,7 @@ def run_pipeline(
         spark.sparkContext.defaultParallelism * 2, pcfg.num_partitions
     )
     in_scope = (
-        pages.where(F.col("lang").isin(*include_langs))
+        pages.where(F.col("lang").isin(*DEDUP_LANGS))
         .repartition(target_parts, "url")
     )
     # slim projection persisted once: normalize feeds 5 consumers
@@ -104,9 +102,8 @@ def run_pipeline(
     # the 1M corpus at local[16]. One cheap count() pins it — and its
     # value is the data-dependent guard for broadcasting the verify
     # windows (r06: the two text-attach joins otherwise shuffle the
-    # pair table twice; windows are ~1 KB/doc, so 500k docs stays
-    # ~0.5 GB — above that the plain join is also the right plan).
-    n_normed = normed.count()
+    # pair table twice).
+    bcast_texts = fits_broadcast(normed.count(), WINDOW_ATTACH_ROW_BYTES)
 
     # 2. exact-hash pre-dedup: strips identical-content mass before LSH
     exact_edges_l, reps_l = exact_dedup(normed)
@@ -154,9 +151,7 @@ def run_pipeline(
     # 5. bounded-edit verification (precision pass)
     verified = runner.materialize(
         "verified_pairs",
-        lambda: verify_pairs(
-            cands, normed, pcfg, broadcast_texts=n_normed <= WINDOW_BCAST_MAX_ROWS
-        ),
+        lambda: verify_pairs(cands, normed, pcfg, broadcast_texts=bcast_texts),
     )
     if checkpoint_dir is None:
         # FORCE the cache before CC: the symmetrized edge union reads
@@ -193,25 +188,9 @@ def run_pipeline(
             "substring_pairs", lambda: substring_pairs(normed, pcfg)
         )
 
-    # 9. optional evidence enrichment: full reference Info counters for
-    # the verified dup pairs (the pair_features table, SURVEY §1)
-    feats = None
-    if include_pair_features:
-        from ufuzzy_spark.operators.pair_features import pair_features
-
-        feats = runner.materialize(
-            "pair_features", lambda: pair_features(dup_edges, normed, pcfg)
-        )
-
     runner.write_metrics_table()
     return PipelineResult(
-        clusters,
-        verified,
-        cands,
-        sub_pairs,
-        metrics,
-        pair_features=feats,
-        _persisted=persisted,
+        clusters, verified, cands, sub_pairs, metrics, _persisted=persisted
     )
 
 

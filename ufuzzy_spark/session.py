@@ -10,7 +10,37 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+# The one broadcast budget. A data-dependent frame may be broadcast
+# iff its built relation, n_rows x row_bytes, fits in BCAST_MAX_BYTES;
+# above that the join plans plain (sort-merge under AQE), which is
+# also the right plan at that size. 1 GiB is ~4% of the default
+# driver heap below, which holds every built relation. Widths are
+# BroadcastExchange dataSize / numOutputRows at ~200k-row replicas of
+# the real frames (CLAUDE.md "One broadcast budget"); the hashed
+# relation grows in power-of-two pages, so they are upper bounds.
+BCAST_MAX_BYTES = 1 << 30
+
+# Widest incremental key frame: label_moves (old_label, new_label),
+# two urls, 376 B/row measured.
+KEY_ROW_BYTES = 400
+
+
+def fits_broadcast(n_rows: int, row_bytes: int) -> bool:
+    """Whether ``n_rows`` of ``row_bytes`` each fit the broadcast budget.
+
+    ``row_bytes`` counts every relation the site builds from those rows
+    (two for an attach join whose sides are not reused)."""
+    return n_rows * row_bytes <= BCAST_MAX_BYTES
+
+
+def broadcast_if_fits(
+    df: DataFrame, n_rows: int, row_bytes: int = KEY_ROW_BYTES
+) -> DataFrame:
+    """``df`` with a broadcast hint iff its ``n_rows`` fit the budget."""
+    return F.broadcast(df) if fits_broadcast(n_rows, row_bytes) else df
 
 
 def get_spark(
@@ -50,10 +80,10 @@ def get_spark(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.showConsoleProgress", "false")
         # local mode: the driver JVM IS the executor, so it holds the
-        # broadcast relations, persisted chain blocks AND task memory;
-        # the sandbox has 128 GiB, and 12g was sized before the r06
-        # broadcast-attach paths. Deployments set SPARK_DRIVER_MEM (on
-        # a real cluster the driver only needs the broadcasts).
+        # broadcast relations (each within BCAST_MAX_BYTES), persisted
+        # chain blocks AND task memory. Deployments set
+        # SPARK_DRIVER_MEM (on a real cluster the driver only needs
+        # the broadcasts).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
     for k, v in (extra_conf or {}).items():

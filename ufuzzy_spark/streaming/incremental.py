@@ -95,7 +95,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ufuzzy_spark.catalog import LocalParquetCatalog
-from ufuzzy_spark.config import PipelineConfig
+from ufuzzy_spark.config import DEDUP_LANGS, PipelineConfig
 from ufuzzy_spark.operators.components import (
     connected_components,
     elect_canonical,
@@ -107,7 +107,8 @@ from ufuzzy_spark.operators.lsh import (
 )
 from ufuzzy_spark.operators.minhash import banded_signatures
 from ufuzzy_spark.operators.normalize import normalize
-from ufuzzy_spark.operators.verify import WINDOW_BCAST_MAX_ROWS, verify_pairs
+from ufuzzy_spark.operators.verify import WINDOW_ATTACH_ROW_BYTES, verify_pairs
+from ufuzzy_spark.session import broadcast_if_fits, fits_broadcast
 
 _SIGS_SCHEMA = "content_hash long, band_hashes array<bigint>, simhash long"
 _VERDICTS_SCHEMA = "hash_lo long, hash_hi long, is_dup boolean"
@@ -117,7 +118,7 @@ _SLIM_COLS = ("url", "content_hash", "n_chars", "warc_ts")
 # bucketed state layout (VERDICT r4 next #6 — the docs/PLANS.md
 # residual-cost claim, made real): FULL snapshots of the memo tables
 # are hash-bucketed on exactly the keys their ingest joins probe, so
-# when a probe side outgrows _BCAST_MAX_ROWS and the join plans as
+# when a probe side outgrows the broadcast budget and the join plans as
 # sort-merge, the state side feeds the join straight from the scan —
 # NO Exchange over O(state) bytes (tests/test_plans.py pins the
 # shape). pair_cnt is deliberately absent: its reads are pk-hash semi
@@ -135,18 +136,15 @@ def _bspec(table: str, n_buckets: int):
 
 _CONFIG_GUARD = "_PIPELINE_CONFIG.json"
 
-# data-dependent broadcast guard: the blast-radius frames are usually
-# small (broadcast-filtered scans are the whole design), but a LARGE
-# snapshot — above all the first ingest of a big corpus — can push a
-# "small" side past what the driver can build as a hashed relation
-# (measured: 58M touched-bucket keys OOMed a 12g driver at 2.9M docs).
-# Above this row bound we fall back to a plain join and let AQE plan
-# it; that is also the correct plan at that size.
-_BCAST_MAX_ROWS = 8_000_000
-
-
-def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
-    return F.broadcast(df) if n_rows <= _BCAST_MAX_ROWS else df
+# every data-dependent broadcast goes through session.broadcast_if_fits:
+# the blast-radius frames are usually small (broadcast-filtered scans
+# are the whole design), but a LARGE snapshot — above all the first
+# ingest of a big corpus — can push a "small" side past what the
+# driver can build as a hashed relation (measured: 58M touched-bucket
+# keys OOMed a 12g driver at 2.9M docs). Over the budget the join
+# plans plain and AQE picks the shape; that is also the correct plan
+# at that size. The key frames here are at most two urls wide, the
+# helper's default width.
 
 
 def _fence(df: DataFrame) -> DataFrame:
@@ -219,7 +217,7 @@ def _attach_hashes(pairs: DataFrame, url_map: DataFrame, n_map: int) -> DataFram
     and is broadcast when its ``n_map`` rows allow."""
 
     def side(s: str) -> DataFrame:
-        return _maybe_broadcast(
+        return broadcast_if_fits(
             url_map.select(
                 F.col("url").alias(f"url_{s}"),
                 F.col("content_hash").alias(f"hash_{s}"),
@@ -246,10 +244,10 @@ def _dup_edges(pairs_h: DataFrame, verdicts: DataFrame, n_pairs: int) -> DataFra
     must already have a verdict there)."""
     keys = ["hash_lo", "hash_hi"]
     hits = verdicts.join(
-        _maybe_broadcast(pairs_h.select(*keys), n_pairs), keys, "left_semi"
+        broadcast_if_fits(pairs_h.select(*keys), n_pairs), keys, "left_semi"
     )
     return (
-        pairs_h.join(_maybe_broadcast(hits, n_pairs), keys)
+        pairs_h.join(broadcast_if_fits(hits, n_pairs), keys)
         .where("is_dup")
         .select("url_a", "url_b")
     )
@@ -270,7 +268,7 @@ def _verify_misses(
     if stats_out is not None:
         stats_out["pairs_verified"] = n_to_verify
     ver_texts = texts.join(
-        _maybe_broadcast(_endpoints(to_verify), 2 * n_to_verify),
+        broadcast_if_fits(_endpoints(to_verify), 2 * n_to_verify),
         "url",
         "left_semi",
     )
@@ -282,7 +280,7 @@ def _verify_misses(
             ver_texts,
             pcfg,
             # ver_texts is semi-join-bounded to <= 2*n_to_verify urls
-            broadcast_texts=2 * n_to_verify <= WINDOW_BCAST_MAX_ROWS,
+            broadcast_texts=fits_broadcast(2 * n_to_verify, WINDOW_ATTACH_ROW_BYTES),
         ).select("hash_lo", "hash_hi", "is_dup")
     )
 
@@ -396,7 +394,7 @@ def _batch_recompute(
     n_reps = reps_all.count()
     posts = (
         _hash_postings(sigs_all, pcfg)
-        .join(_maybe_broadcast(reps_all, n_reps), "content_hash")
+        .join(broadcast_if_fits(reps_all, n_reps), "content_hash")
         .select("url", "band_id", "band_hash")
     )
     pair_counts = _fence(candidate_pair_counts(posts, pcfg))
@@ -549,7 +547,7 @@ def incremental_dedup(
     win = 2 * pcfg.verify_window_chars
 
     new_normed = _fence(
-        normalize(new_pages.where(F.col("lang") == "en"), pcfg.match)
+        normalize(new_pages.where(F.col("lang").isin(*DEDUP_LANGS)), pcfg.match)
         .select("url", "warc_ts", "norm_text")
         .withColumn("content_hash", F.xxhash64("norm_text"))
     )
@@ -607,7 +605,7 @@ def incremental_dedup(
         # content clusters — refuse loudly rather than corrupt state
         n_dup_urls = (
             old_keys.select("url")
-            .join(_maybe_broadcast(new_urls, n_new), "url", "left_semi")
+            .join(broadcast_if_fits(new_urls, n_new), "url", "left_semi")
             .count()
         )
         if n_dup_urls:
@@ -644,7 +642,7 @@ def incremental_dedup(
     if has_state:
         old_reps_batch = _fence(
             old_keys.join(
-                _maybe_broadcast(batch_min.select("content_hash"), n_new),
+                broadcast_if_fits(batch_min.select("content_hash"), n_new),
                 "content_hash",
                 "left_semi",
             )
@@ -670,7 +668,7 @@ def incremental_dedup(
     sig_inputs = (
         new_normed.withColumn("rn", F.row_number().over(first_per_hash))
         .where("rn = 1")
-        .join(_maybe_broadcast(new_hashes, n_new), "content_hash", "left_semi")
+        .join(broadcast_if_fits(new_hashes, n_new), "content_hash", "left_semi")
         # banded_signatures keys its output by the passthrough "url"
         # column — feed the content hash as that key so the sig table
         # is text-addressed (memo survives representative churn)
@@ -721,7 +719,7 @@ def incremental_dedup(
     # --- touched buckets: keys gaining a new hash or a churned rep -- #
     new_posts = _hash_postings(new_sigs, pcfg)
     churned_sigs = old_sigs.join(
-        _maybe_broadcast(churned, n_new), "content_hash", "left_semi"
+        broadcast_if_fits(churned, n_new), "content_hash", "left_semi"
     )
     touched_keys = _fence(
         new_posts.select("band_id", "band_hash")
@@ -742,7 +740,7 @@ def incremental_dedup(
     # explode of the sigs state — no shuffle reaches untouched keys
     old_member_posts = _fence(
         _hash_postings(old_sigs, pcfg).join(
-            _maybe_broadcast(touched_keys, n_touched),
+            broadcast_if_fits(touched_keys, n_touched),
             ["band_id", "band_hash"],
             "left_semi",
         )
@@ -754,7 +752,7 @@ def incremental_dedup(
     # reps for member hashes, before and after this snapshot
     old_reps_members = _fence(
         old_keys.join(
-            _maybe_broadcast(member_hashes, n_member_posts),
+            broadcast_if_fits(member_hashes, n_member_posts),
             "content_hash",
             "left_semi",
         )
@@ -864,7 +862,7 @@ def incremental_dedup(
     old_pair_cnt = catalog.read_all(spark, "pair_cnt")
     prior_tot = (
         old_pair_cnt.join(
-            _maybe_broadcast(
+            broadcast_if_fits(
                 changed.select(F.xxhash64("url_a", "url_b").alias("pk")),
                 n_changed,
             ),
@@ -927,7 +925,7 @@ def incremental_dedup(
     n_added = added_h.count()
     memo_hits = _fence(
         old_verdicts.join(
-            _maybe_broadcast(added_h.select("hash_lo", "hash_hi"), n_added),
+            broadcast_if_fits(added_h.select("hash_lo", "hash_hi"), n_added),
             ["hash_lo", "hash_hi"],
             "left_semi",
         )
@@ -938,14 +936,14 @@ def incremental_dedup(
     if stats_out is not None:
         stats_out["old_x_old_reverified"] = (
             to_verify.join(
-                _maybe_broadcast(
+                broadcast_if_fits(
                     new_urls.withColumnRenamed("url", "url_a"), n_new
                 ),
                 "url_a",
                 "left_anti",
             )
             .join(
-                _maybe_broadcast(
+                broadcast_if_fits(
                     new_urls.withColumnRenamed("url", "url_b"), n_new
                 ),
                 "url_b",
@@ -963,7 +961,7 @@ def incremental_dedup(
     ).unionByName(new_verdicts)
     added_dup = (
         added_h.join(
-            _maybe_broadcast(verdicts_added, n_added), ["hash_lo", "hash_hi"]
+            broadcast_if_fits(verdicts_added, n_added), ["hash_lo", "hash_hi"]
         )
         .where("is_dup")
         .select("url_a", "url_b")
@@ -1004,7 +1002,7 @@ def incremental_dedup(
         # edges are regathered from the refcount + verdict state
         dissolved_labels = _fence(
             prior_labels.join(
-                _maybe_broadcast(_endpoints(removed_dup), 2 * n_removed_dup),
+                broadcast_if_fits(_endpoints(removed_dup), 2 * n_removed_dup),
                 "url",
                 "left_semi",
             )
@@ -1018,7 +1016,7 @@ def incremental_dedup(
         # counted broadcast guard, same as the rest of the function
         dissolved = _fence(
             prior_labels.join(
-                _maybe_broadcast(dissolved_labels, n_dis_labels),
+                broadcast_if_fits(dissolved_labels, n_dis_labels),
                 "cluster_id",
                 "left_semi",
             ).select("url")
@@ -1032,7 +1030,7 @@ def incremental_dedup(
         pc_all = old_pair_cnt.unionByName(changed.select("url_a", "url_b", "d"))
         inc_pairs = _fence(
             pc_all.join(
-                _maybe_broadcast(
+                broadcast_if_fits(
                     dissolved.withColumnRenamed("url", "url_a"), n_dissolved
                 ),
                 "url_a",
@@ -1040,7 +1038,7 @@ def incremental_dedup(
             )
             .unionByName(
                 pc_all.join(
-                    _maybe_broadcast(
+                    broadcast_if_fits(
                         dissolved.withColumnRenamed("url", "url_b"),
                         n_dissolved,
                     ),
@@ -1059,7 +1057,7 @@ def incremental_dedup(
         # cap (a retired pair incident to a mega-component can make
         # this set arbitrarily large)
         inc_map = all_keys.join(
-            _maybe_broadcast(_endpoints(inc_pairs), 2 * n_inc), "url", "left_semi"
+            broadcast_if_fits(_endpoints(inc_pairs), 2 * n_inc), "url", "left_semi"
         )
         inc_pairs_h = _fence(_attach_hashes(inc_pairs, inc_map, 2 * n_inc))
         m_dup_edges = _dup_edges(
@@ -1070,13 +1068,13 @@ def incremental_dedup(
         # current (min-url) rep
         dis_hashes = (
             all_keys.join(
-                _maybe_broadcast(dissolved, n_dissolved), "url", "left_semi"
+                broadcast_if_fits(dissolved, n_dissolved), "url", "left_semi"
             )
             .select("content_hash")
             .distinct()
         )
         same_hash_docs = all_keys.join(
-            _maybe_broadcast(dis_hashes, n_dissolved),
+            broadcast_if_fits(dis_hashes, n_dissolved),
             "content_hash",
             "left_semi",
         )
@@ -1105,7 +1103,7 @@ def incremental_dedup(
     ep_urls = _fence(_endpoints(graph_edges_raw))
     n_eps = ep_urls.count()
     ep_labels = prior_labels.join(
-        _maybe_broadcast(ep_urls, n_eps), "url", "left_semi"
+        broadcast_if_fits(ep_urls, n_eps), "url", "left_semi"
     )
     ep_map = _fence(
         ep_urls.join(own_nodes, "url", "left")
@@ -1157,10 +1155,10 @@ def incremental_dedup(
     )
 
     own_rows = cc_small.join(
-        _maybe_broadcast(own_nodes.select("url"), n_own), "url", "left_semi"
+        broadcast_if_fits(own_nodes.select("url"), n_own), "url", "left_semi"
     )
     label_moves = cc_small.join(
-        _maybe_broadcast(
+        broadcast_if_fits(
             supernode_labels.withColumnRenamed("cluster_id", "url"), n_eps
         ),
         "url",
@@ -1170,14 +1168,14 @@ def incremental_dedup(
     )
     intact_rows = (
         prior_labels.withColumnRenamed("cluster_id", "old_label")
-        .join(_maybe_broadcast(label_moves, n_eps), "old_label")
+        .join(broadcast_if_fits(label_moves, n_eps), "old_label")
         .select("url", F.col("new_label").alias("cluster_id"))
         # a dissolved member's prior row must not resurface through
         # an intact-component relabel (disjoint by construction —
         # dissolved components are never supernodes — but keep the
         # guard cheap and explicit)
         .join(
-            _maybe_broadcast(own_nodes.select("url"), n_own),
+            broadcast_if_fits(own_nodes.select("url"), n_own),
             "url",
             "left_anti",
         )
@@ -1185,7 +1183,7 @@ def incremental_dedup(
     affected_members = _fence(own_rows.unionByName(intact_rows))
     n_aff = affected_members.count()
     aff_slim = slim_all.join(
-        _maybe_broadcast(affected_members.select("url"), n_aff),
+        broadcast_if_fits(affected_members.select("url"), n_aff),
         "url",
         "left_semi",
     )
@@ -1193,7 +1191,7 @@ def incremental_dedup(
         affected_members, aff_slim, n_chars_col="n_chars"
     )
     untouched = prior_clusters.join(
-        _maybe_broadcast(affected_labels, n_eps + n_dis_labels),
+        broadcast_if_fits(affected_labels, n_eps + n_dis_labels),
         "cluster_id",
         "left_anti",
     )
