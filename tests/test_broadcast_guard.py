@@ -2,10 +2,11 @@
 
 ``session.broadcast_if_fits`` / ``fits_broadcast`` hold the package's
 only broadcast rule (n_rows x row_bytes <= BCAST_MAX_BYTES). A
-broadcast hint may appear only inside that helper, in the window
-attach whose callers decide through ``fits_broadcast``, or in a
-function whose broadcast side is bounded independently of corpus
-size. A new bare broadcast fails this test.
+broadcast hint may appear only inside that helper, in
+``broadcast_once`` (one relation for an attach join's two sides)
+whose callers decide through ``fits_broadcast``, or in a function
+whose broadcast side is bounded independently of corpus size. A new
+bare broadcast fails this test.
 """
 
 import ast
@@ -15,7 +16,7 @@ PKG = Path(__file__).resolve().parent.parent / "ufuzzy_spark"
 
 ALLOWED = {
     ("session.py", "broadcast_if_fits"): "the one guarded broadcast",
-    ("operators/verify.py", "_attach_windows"): "callers pass fits_broadcast",
+    ("session.py", "broadcast_once"): "callers pass fits_broadcast",
     ("entry_queries.py", "q_simhash_fingerprint"): "the 60-row bit table",
     ("entry_queries.py", "q_tpch_region_revenue"): "TPC-H nation and region",
     ("entry_queries.py", "q_tpch_top_suppliers"): "the 10-row top-k",

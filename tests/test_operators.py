@@ -842,9 +842,10 @@ def _pair_sums(spark, cat):
     )
 
 
-def _ingest_seed13(spark, root, frac):
+def _ingest_seed13(spark, root, frac, jobs=None):
     """The same two snapshots (shuffled seed-13 corpus, bucket cap 2)
-    into a fresh catalog at ``root``; returns (catalog, last mode)."""
+    into a fresh catalog at ``root``; returns (catalog, last mode).
+    ``jobs``, when given, receives each ingest's Spark job count."""
     import random
 
     from fixtures.gen import gen_corpus
@@ -856,12 +857,18 @@ def _ingest_seed13(spark, root, frac):
     pages, _ = gen_corpus(300, seed=13, label_pairs=False)
     random.Random(1301).shuffle(pages)
     cat = LocalParquetCatalog(root)
-    for snap in (pages[:200], pages[200:]):
+    for i, snap in enumerate((pages[:200], pages[200:])):
         stats: dict = {}
-        incremental_dedup(
-            spark, cat, spark.createDataFrame(snap), pcfg=pcfg,
-            stats_out=stats, batch_cutover_frac=frac,
+        n_jobs = _count_jobs(
+            spark,
+            f"{root}#{i}",
+            lambda: incremental_dedup(
+                spark, cat, spark.createDataFrame(snap), pcfg=pcfg,
+                stats_out=stats, batch_cutover_frac=frac,
+            ),
         )
+        if jobs is not None:
+            jobs.append(n_jobs)
     return cat, stats["mode"]
 
 
@@ -1314,6 +1321,69 @@ def test_pixel_decode_round_trip():
     assert make_thumbnail(b"\xff\xd8\xff\xe0junk", 8) is None
 
 
+def test_pixel_decode_caps_declared_size():
+    """A header may declare any geometry: past MAX_PIXELS (64 Mpx)
+    decode_pixels returns None before any allocation sized by it. An
+    8193 x 8193 GIF screen over a 1 x 1 frame (a ~270 MB canvas and
+    palette lookup otherwise), and PNG / JPEG headers declaring the
+    same size over tiny valid streams."""
+    import struct
+    import sys as _sys
+    import zlib
+    from pathlib import Path as _Path
+
+    import numpy as np
+
+    _sys.path.insert(0, str(_Path(__file__).resolve().parent.parent / "scripts"))
+    from gen_image_fixture import _gif_lzw_encode, jpeg_baseline
+
+    from ufuzzy_spark.multimodal.decode import MAX_PIXELS, decode_pixels
+
+    side = 8193
+    assert side * side > MAX_PIXELS >= 8192 * 8192
+
+    def gif(sw, sh):
+        lzw = _gif_lzw_encode(bytes([1]), 2)
+        return (
+            b"GIF89a"
+            + struct.pack("<HHBBB", sw, sh, 0x80, 0, 0)  # 2-entry palette
+            + bytes([0, 0, 0, 255, 255, 255])
+            + b"\x2c" + struct.pack("<HHHHB", 0, 0, 1, 1, 0)
+            + bytes([2, len(lzw)]) + lzw + b"\x00\x3b"
+        )
+
+    assert decode_pixels(gif(2, 1)).tolist() == [[[255, 255, 255], [0, 0, 0]]]
+    assert decode_pixels(gif(side, side)) is None
+    assert decode_pixels(gif(side, 1)) is not None  # only w x h counts
+
+    def chunk(tag, body):
+        return (
+            struct.pack(">I", len(body)) + tag + body
+            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
+        )
+
+    def png(w, h):
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)  # 8-bit gray
+        idat = zlib.compress(bytes(h * (w + 1)))
+        return (
+            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
+        )
+
+    assert decode_pixels(png(3, 2)).shape == (2, 3, 3)
+    assert decode_pixels(png(side, side)) is None
+
+    rng = np.random.RandomState(5)
+    jpg, _ = jpeg_baseline(
+        [rng.randint(0, 256, size=(8, 8)).astype(np.float64)],
+        [(1, 1)], [np.ones(64, np.int64)], 8, 8,
+    )
+    assert decode_pixels(jpg).shape == (8, 8, 3)
+    sof = jpg.index(b"\xff\xc0")
+    big = jpg[: sof + 5] + struct.pack(">HH", side, side) + jpg[sof + 9 :]
+    assert decode_pixels(big) is None
+
+
 def test_incremental_state_buckets_matches_batch(spark, tmp_path):
     """state_buckets is layout only: with bucketed full snapshots and
     per-ingest compaction (so the SECOND ingest reads its sigs/normed/
@@ -1475,17 +1545,12 @@ def test_jpeg_baseline_decode_pinned():
     assert decode_pixels(payload.replace(b"\xff\xc0", b"\xff\xc2", 1)) is None
 
 
-def test_connected_components_long_chain(spark):
-    """Near-dup CHAINS (template pages under successive edits) produce
-    high-diameter components — the sf0.1 documents table holds one of
-    diameter >= 11, which cost 12 one-hop rounds before pointer
-    jumping (round 5). A 60-node path converges only through the jump
-    step (one-hop propagation would need 59 > max_iter rounds and
-    raise); labels must still be the component-min url exactly."""
-    from ufuzzy_spark.operators.components import connected_components
-
+def _chain_graph(spark):
+    """A 60-node path, a disjoint 31-node path rooted at a lexically
+    larger url and one isolated node -> (edges, nodes, component-min
+    labels). Label doubling lowers labels in 7 rounds on the 60-node
+    path, and an 8th round confirms the fixpoint."""
     edges = [(f"u{i:03d}", f"u{i + 1:03d}") for i in range(59)]
-    # a second, disjoint chain rooted at a lexically larger url
     edges += [(f"w{i:03d}", f"w{i + 1:03d}") for i in range(30)]
     df = spark.createDataFrame(edges, ["url_a", "url_b"])
     nodes = spark.createDataFrame(
@@ -1494,14 +1559,89 @@ def test_connected_components_long_chain(spark):
         + [("zzz_isolated",)],
         ["url"],
     )
-    got = {
-        (r.url, r.cluster_id)
-        for r in connected_components(df, all_nodes=nodes).collect()
-    }
     want = {(f"u{i:03d}", "u000") for i in range(60)}
     want |= {(f"w{i:03d}", "w000") for i in range(31)}
     want.add(("zzz_isolated", "zzz_isolated"))
-    assert got == want
+    return df, nodes, want
+
+
+def _cc_labels(spark, **kwargs):
+    from ufuzzy_spark.operators.components import connected_components
+
+    df, nodes, _ = _chain_graph(spark)
+    out = connected_components(df, all_nodes=nodes, **kwargs)
+    return {(r.url, r.cluster_id) for r in out.collect()}
+
+
+def test_connected_components_long_chain(spark):
+    """Near-dup CHAINS (template pages under successive edits) produce
+    high-diameter components — the sf0.1 documents table holds one of
+    diameter >= 11, which cost 12 one-hop rounds before pointer
+    jumping (round 5). A 60-node path converges only through the jump
+    step (one-hop propagation would need 59 > max_iter rounds and
+    raise); labels must still be the component-min url exactly."""
+    assert _cc_labels(spark) == _chain_graph(spark)[2]
+
+
+def test_connected_components_non_convergence_raises(spark):
+    """Labels still moving after max_iter rounds raise instead of
+    returning inconsistent cluster ids. max_iter counts the rounds
+    that lower labels: 7 suffice for the 60-node path (the round that
+    confirms the fixpoint may run as round 8), 6 do not."""
+    want = _chain_graph(spark)[2]
+    with pytest.raises(RuntimeError, match="did not converge in 6"):
+        _cc_labels(spark, max_iter=6)
+    assert _cc_labels(spark, max_iter=7) == want
+    assert _cc_labels(spark) == want
+
+
+def _count_jobs(spark, group: str, fn):
+    """Spark jobs that ``fn()`` runs, read from the status tracker
+    under a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the tracker learns of jobs from the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Job budgets, each the highest count measured at the commit that set
+# it plus one job; job counts barely move where walls swing. Bounds
+# only go down: a change that lowers a count tightens its bound, and
+# one that raises it says why in CHANGES.md. Measured (local[8], 8
+# shuffle partitions, 4 cores): CC 63 in every run, 79 with a
+# limit(1).count() probe per round; the delta ingest 165 or 167 (8
+# runs; 201-203 when its fenced frames and CC rounds were counted by
+# separate actions).
+CC_CHAIN_JOBS = 64
+DELTA_INGEST_JOBS = 168
+
+
+def test_job_budget_cc_and_delta_ingest(spark, tmp_path):
+    """Every fence counts itself (session.fence) and CC's convergence
+    rides on its round fence, so neither path pays a job to count a
+    frame it just materialized: CC over the chain graph (8 rounds) and
+    the seed-13 delta-leg absorption stay within their job budgets."""
+    from ufuzzy_spark.operators.components import connected_components
+
+    df, nodes, want = _chain_graph(spark)
+    got = []
+    cc_jobs = _count_jobs(
+        spark,
+        "budget-cc",
+        lambda: got.extend(connected_components(df, all_nodes=nodes).collect()),
+    )
+    assert {(r.url, r.cluster_id) for r in got} == want
+    assert cc_jobs <= CC_CHAIN_JOBS, cc_jobs
+
+    jobs: list[int] = []
+    _, mode = _ingest_seed13(spark, tmp_path / "budget", None, jobs)
+    assert mode == "delta"
+    assert jobs[1] <= DELTA_INGEST_JOBS, jobs
 
 
 def test_connected_components_deep_iteration_stays_linear(spark):
@@ -1509,7 +1649,7 @@ def test_connected_components_deep_iteration_stays_linear(spark):
     checkpointed self-join loops DOUBLE the preserved sizeInBytes
     BigInteger's bit-length per round, which turned rounds 14-19 into
     2 -> 220 s of pure BigInteger.multiplyToomCook3 under Catalyst
-    stats estimation (components.py _fence docstring). A 300k-node
+    stats estimation (components.py _STATS_RESET_EVERY comment). A 300k-node
     path needs ~log2(300k) ~= 18-19 jump rounds — enough to cross
     three _STATS_RESET_EVERY fences and reach the formerly-explosive
     regime. Healthy wall is ~linear in rounds (< 2 min here); a

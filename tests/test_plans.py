@@ -116,9 +116,9 @@ def test_tpch_region_revenue_broadcasts_dims(spark):
     assert not has_cartesian(plan), plan
 
 
-def _executed_operators(df) -> list[str]:
-    """Node names of df's final (post-AQE) physical plan, query-stage
-    wrappers opened; run df first."""
+def _executed_operators(df) -> list[tuple[str, set[str]]]:
+    """(node name, output column names) of df's final (post-AQE)
+    physical plan, query-stage wrappers opened; run df first."""
     out, todo = [], [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
@@ -129,10 +129,24 @@ def _executed_operators(df) -> list[str]:
         if name.endswith("QueryStage"):
             todo.append(node.plan())
             continue
-        out.append(name)
+        cols = node.output()
+        out.append((name, {cols.apply(i).name() for i in range(cols.size())}))
         children = node.children()
         todo.extend(children.apply(i) for i in range(children.size()))
     return out
+
+
+def _attach_builds(df, payload: set[str]) -> list[str]:
+    """Sorted names of the broadcast exchanges in df's executed plan
+    whose output carries a ``payload`` column."""
+    return sorted(
+        name
+        for name, cols in _executed_operators(df)
+        if name in ("BroadcastExchange", "ReusedExchange") and cols & payload
+    )
+
+
+ONE_BUILD = ["BroadcastExchange", "ReusedExchange"]
 
 
 def test_ngram_jaccard_builds_shingle_arrays_once(spark):
@@ -142,9 +156,58 @@ def test_ngram_jaccard_builds_shingle_arrays_once(spark):
 
     df = q_ngram_jaccard(spark, SF_DIR)
     df.collect()
-    ops = _executed_operators(df)
-    assert ops.count("BroadcastExchange") == 1, ops
-    assert ops.count("ReusedExchange") == 1, ops
+    names = [name for name, _ in _executed_operators(df)]
+    assert names.count("BroadcastExchange") == 1, names
+    assert names.count("ReusedExchange") == 1, names
+    assert _attach_builds(df, {"sha", "shb"}) == ONE_BUILD
+
+
+def test_verify_window_attach_builds_windows_once(spark):
+    """verify_pairs (and pair_features, same attach) with
+    broadcast_texts: the url_a and url_b sides read one built window
+    relation."""
+    from ufuzzy_spark.operators.verify import verify_pairs
+
+    normed = spark.createDataFrame(
+        [(f"u{i}", f"text number {i} words") for i in range(20)],
+        ["url", "norm_text"],
+    ).persist()
+    pairs = spark.createDataFrame(
+        [(f"u{i}", f"u{i + 1}") for i in range(19)], ["url_a", "url_b"]
+    )
+    df = verify_pairs(pairs, normed, broadcast_texts=True)
+    assert df.count() == 19
+    df.collect()
+    assert _attach_builds(df, {"norm_a", "norm_b"}) == ONE_BUILD
+    normed.unpersist()
+
+
+def test_verify_pairs_native_builds_profiles_once(spark):
+    from ufuzzy_spark.entry_queries import q_verify_pairs_native
+
+    df = q_verify_pairs_native(spark, SF_DIR)
+    df.collect()
+    assert _attach_builds(df, {"terms_a", "terms_b"}) == ONE_BUILD
+
+
+def test_embedding_near_dup_builds_vectors_once(spark, monkeypatch):
+    """The cosine attach runs inside CC's first fence, so the edge
+    frame handed to connected_components is captured and run."""
+    import ufuzzy_spark.operators.components as components
+    from ufuzzy_spark.entry_queries import q_embedding_near_dup
+
+    seen = []
+    cc = components.connected_components
+
+    def capture(edges, *args, **kwargs):
+        seen.append(edges)
+        return cc(edges, *args, **kwargs)
+
+    monkeypatch.setattr(components, "connected_components", capture)
+    q_embedding_near_dup(spark, SF_DIR)
+    (edges,) = seen
+    edges.collect()
+    assert _attach_builds(edges, {"xe", "ye"}) == ONE_BUILD
 
 
 # -- bucketed state layout (VERDICT r4 next #6) ------------------------- #

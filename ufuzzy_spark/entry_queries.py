@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ufuzzy_spark.config import MatchConfig
 from ufuzzy_spark.latinize import ACCENT_DST, ACCENT_SRC
 from ufuzzy_spark.oracle import UFuzzyOracle
-from ufuzzy_spark.session import broadcast_if_fits, fits_broadcast
+from ufuzzy_spark.session import broadcast_once, fits_broadcast
 
 # ---------------------------------------------------------------- #
 # shared helpers
@@ -879,18 +879,11 @@ def _jaccard_df(spark, sf_dir, size_ratio_floor: float | None = None):
     cands, _ = _cands(spark, sf_dir)
     arrs, n_docs = _sharr(spark, sf_dir)
     if fits_broadcast(n_docs, _SHARR_ROW_BYTES):
-        # one built relation for both sides: under AQE two broadcasts
-        # of a persisted frame each wrap their own table-cache stage,
-        # so neither reuses the other and the arrays are built twice.
-        # Over one RDD-backed frame (a JVM-side Row round trip of the
-        # cached arrays) the second side is a ReusedExchange.
-        side = DataFrame(
-            spark._jsparkSession.createDataFrame(arrs._jdf.rdd(), arrs._jdf.schema()),
-            spark,
+        # one built relation for both sides
+        side = broadcast_once(arrs, True)
+        j = cands.join(side.toDF("id_a", "sha"), "id_a").join(
+            side.toDF("id_b", "shb"), "id_b"
         )
-        a = broadcast_if_fits(side.toDF("id_a", "sha"), n_docs, _SHARR_ROW_BYTES)
-        b = broadcast_if_fits(side.toDF("id_b", "shb"), n_docs, _SHARR_ROW_BYTES)
-        j = cands.join(a, "id_a").join(b, "id_b")
         if size_ratio_floor is not None:
             # exact integer compare: keep iff min*SCALE >= floor*SCALE*max
             num = int(round(size_ratio_floor * 2_000_000))
@@ -1015,16 +1008,13 @@ def q_verify_pairs_native(spark, sf_dir):
         ).alias("terms"),
         F.substring("norm", 1, _VSCAN).alias("scan"),
     )
-    # two built relations of ~850 B/row each (measured at sf0.1)
+    # one built relation of ~850 B/row (measured at sf0.1) for both sides
+    prof = broadcast_once(prof, fits_broadcast(n_docs, 900))
     pa, pb = (
-        broadcast_if_fits(
-            prof.select(
-                F.col("doc_id").alias(f"id_{s}"),
-                F.col("terms").alias(f"terms_{s}"),
-                F.col("scan").alias(f"scan_{s}"),
-            ),
-            n_docs,
-            2 * 900,
+        prof.select(
+            F.col("doc_id").alias(f"id_{s}"),
+            F.col("terms").alias(f"terms_{s}"),
+            F.col("scan").alias(f"scan_{s}"),
         )
         for s in "ab"
     )
@@ -2912,14 +2902,13 @@ def q_embedding_near_dup(spark, sf_dir):
     # attach embeddings to the pair table via guarded broadcast (r06):
     # candidate pairs outnumber vectors by orders of magnitude inside
     # dense SRP buckets, so the two sort-merge attach joins shuffled
-    # the pair table twice (guide §8); two built relations of ~380
-    # B/row each (float[64] + id, measured)
+    # the pair table twice (guide §8); one built relation of ~380
+    # B/row (float[64] + id, measured) for both sides
+    vecs = broadcast_once(
+        e.select("vec_id", "embedding"), fits_broadcast(n_embs, 400)
+    )
     xe, ye = (
-        broadcast_if_fits(
-            e.select(F.col("vec_id").alias(i), F.col("embedding").alias(v)),
-            n_embs,
-            2 * 400,
-        )
+        vecs.select(F.col("vec_id").alias(i), F.col("embedding").alias(v))
         for i, v in (("ia", "xe"), ("ib", "ye"))
     )
     edges = (

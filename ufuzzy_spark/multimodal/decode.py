@@ -47,6 +47,12 @@ IMAGE_META_SCHEMA = StructType(
 )
 
 
+# decoded-pixel ceiling (64 Mpx), whatever a header declares: every
+# allocation sized by a declared width x height is checked against it
+# first, so a few-byte payload cannot ask for gigabytes
+MAX_PIXELS = 1 << 26
+
+
 def _be(b: bytes) -> int:
     return int.from_bytes(b, "big")
 
@@ -157,12 +163,12 @@ def _png_unfilter(raw: np.ndarray, h: int, w: int, ch: int) -> np.ndarray:
     return out.reshape(h, w, ch)
 
 
-def _gif_lzw(data: bytes, min_code_size: int) -> bytearray | None:
+def _gif_lzw(data: bytes, min_code_size: int, limit: int) -> bytearray | None:
     """GIF-variant LZW decode (spec Appendix F): codes packed
     LSB-first, clear/end codes at 2^m and 2^m+1, code width grows from
     m+1 to a hard 12-bit cap as the table fills (then freezes until
-    the next clear). Returns the palette-index stream, or None on a
-    corrupt stream."""
+    the next clear). Returns the palette-index stream, stopped once it
+    holds ``limit`` indices, or None on a corrupt stream."""
     if not 2 <= min_code_size <= 11:
         return None
     clear = 1 << min_code_size
@@ -200,6 +206,8 @@ def _gif_lzw(data: bytes, min_code_size: int) -> bytearray | None:
         else:
             return None
         out += entry
+        if len(out) >= limit:
+            return out
         prev = entry
         if len(table) >= (1 << width) and width < 12:
             width += 1
@@ -404,7 +412,7 @@ def _jpeg_baseline(p: bytes) -> np.ndarray | None:
                 return None
             h, w = _be(body[1:3]), _be(body[3:5])
             n_comp = body[5]
-            if n_comp not in (1, 3):
+            if n_comp not in (1, 3) or w * h > MAX_PIXELS:
                 return None
             for c in range(n_comp):
                 cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
@@ -567,8 +575,15 @@ def decode_pixels(payload: bytes) -> np.ndarray | None:
             ch = {0: 1, 2: 3, 6: 4}.get(color_type)
             if not (w and h) or ch is None or bit_depth != 8 or interlace:
                 return None
-            raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-            if raw.size != h * (w * ch + 1):
+            if w * h > MAX_PIXELS:
+                return None
+            # inflate at most one byte past the declared size
+            expected = h * (w * ch + 1)
+            raw = np.frombuffer(
+                zlib.decompressobj().decompress(bytes(idat), expected + 1),
+                dtype=np.uint8,
+            )
+            if raw.size != expected:
                 return None
             px = _png_unfilter(raw, h, w, ch)
             if ch == 1:
@@ -577,6 +592,8 @@ def decode_pixels(payload: bytes) -> np.ndarray | None:
 
         if p[:6] in (b"GIF87a", b"GIF89a"):
             sw, sh = _le(p[6:8]), _le(p[8:10])
+            if sw * sh > MAX_PIXELS:
+                return None
             packed, bg = p[10], p[11]
             i = 13
             gct = None
@@ -606,13 +623,15 @@ def decode_pixels(payload: bytes) -> np.ndarray | None:
                         i += 3 * n
                     if pal is None or not (sw and sh and fw and fh):
                         return None
+                    if fw * fh > MAX_PIXELS:
+                        return None
                     mcs = p[i]
                     i += 1
                     lzw = bytearray()
                     while i < len(p) and p[i]:
                         lzw += p[i + 1 : i + 1 + p[i]]
                         i += 1 + p[i]
-                    idx = _gif_lzw(bytes(lzw), mcs)
+                    idx = _gif_lzw(bytes(lzw), mcs, fw * fh)
                     if idx is None or len(idx) < fw * fh:
                         return None
                     frame = np.frombuffer(

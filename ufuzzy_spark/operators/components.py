@@ -15,11 +15,14 @@ treats the label table itself as a second edge set — label(v) is
 always the url of a node in v's component (min over a reachable
 subset), so label(label(v)) stays in-component and chain distance
 halves per round: O(log diameter) rounds total, the same device
-GraphX/GraphFrames CC uses. Each round fences through
-``localCheckpoint`` (lineage truncation), with a periodic ``_fence``
-reset every ``_STATS_RESET_EVERY`` rounds to also drop the preserved
-origin statistics whose BigInteger bit-length otherwise doubles per
-self-join round (see ``_fence`` for the growth arithmetic).
+GraphX/GraphFrames CC uses. Each round is one ``session.fence``: the
+eager ``localCheckpoint`` that truncates lineage also counts, through
+``observe``, how many labels the round lowered, and a round that
+lowered none ends the loop — convergence costs no job of its own.
+Every ``_STATS_RESET_EVERY`` rounds the fenced labels are rebuilt over
+their row RDD to drop the preserved origin statistics, whose
+BigInteger bit-length otherwise doubles per self-join round (see
+``_STATS_RESET_EVERY`` for the growth arithmetic).
 Labels are the cluster's minimum url — deterministic and
 shuffle-stable, matching the fixture convention (FIXTURES.md F4:
 cluster_id = min url in cluster).
@@ -30,47 +33,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# RDD-rebuild cadence for the stats reset. Preserved stats bits grow
-# ~2x per self-join round from a small base (tens of bits), so after k
-# rounds a multiply costs O((b0 * 2^k)^~1.6) — measured harmless
-# through k ~= 12 (sub-ms) and catastrophic by k ~= 17 (seconds/round,
-# see _fence). Resetting every 6 rounds caps bits at ~64x base while
-# paying the Row round-trip at most twice for any realistic diameter
-# (pointer jumping needs log2(diameter) rounds: 6 covers diameter 64,
-# 12 covers 4096).
+from ufuzzy_spark.session import fence, jvm_rows
+
+# Stats-reset cadence. ``Dataset.localCheckpoint`` truncates the plan
+# but PRESERVES the source plan's estimated statistics
+# (``LogicalRDD.originStats``). In an iterative self-join loop,
+# estimated ``sizeInBytes`` is the PRODUCT of both join branches, so
+# the preserved BigInteger's bit-length DOUBLES every round: measured
+# on a 2k-node graph, rounds 0-13 ran ~1 s each, then 2 -> 5 -> 13 ->
+# 28 -> 80 -> 220 s with a constant logical plan, constant RDD lineage,
+# and a constant 4 jobs per round; jstack pinned the wall at 100% CPU
+# inside ``BigInteger.multiplyToomCook3`` under
+# ``IterableOnceOps.product`` (Catalyst size-only stats estimation
+# multiplying megabyte-sized integers). A leaf over the checkpoint's
+# JVM row RDD (``session.jvm_rows``, no job) has the default stats —
+# constant bit-length per round — but its readers pay an InternalRow
+# <-> Row conversion over every row, so the loop rebuilds only every
+# ``_STATS_RESET_EVERY`` rounds: bit growth is exponential in ROUNDS
+# SINCE RESET, from a small base (tens of bits), so after k rounds a
+# multiply costs O((b0 * 2^k)^~1.6) — measured harmless through
+# k ~= 12 (sub-ms) and catastrophic by k ~= 17 (seconds/round).
+# Resetting every 6 rounds caps bits at ~64x base while paying the
+# Row round-trip at most twice for any realistic diameter (pointer
+# jumping needs log2(diameter) rounds: 6 covers diameter 64, 12
+# covers 4096).
 _STATS_RESET_EVERY = 6
-
-
-def _fence(df: DataFrame) -> DataFrame:
-    """Materialize + truncate lineage + DROP Catalyst origin stats.
-
-    ``Dataset.localCheckpoint`` truncates the plan but PRESERVES the
-    source plan's estimated statistics (``LogicalRDD.originStats``).
-    In an iterative self-join loop, estimated ``sizeInBytes`` is the
-    PRODUCT of both join branches, so the preserved BigInteger's
-    bit-length DOUBLES every round: measured on a 2k-node graph, rounds
-    0-13 ran ~1 s each, then 2 -> 5 -> 13 -> 28 -> 80 -> 220 s with a
-    constant logical plan, constant RDD lineage, and a constant 4 jobs
-    per round; jstack pinned the wall at 100% CPU inside
-    ``BigInteger.multiplyToomCook3`` under ``IterableOnceOps.product``
-    (Catalyst size-only stats estimation multiplying megabyte-sized
-    integers). Rebuilding the frame from its JVM row RDD resets stats
-    to the leaf default — constant bit-length per round — while still
-    truncating lineage; the RDD[Row] -> ``createDataFrame`` round-trip
-    stays entirely JVM-side (no Python serialization), but it DOES pay
-    an InternalRow <-> Row conversion over every row (~10% on the
-    sf0.1 ingest bench), which is why the loop below uses it only
-    every ``_STATS_RESET_EVERY`` rounds and plain ``localCheckpoint``
-    in between — bit growth is exponential in ROUNDS SINCE RESET, so a
-    periodic reset keeps multiplies trivial at amortized-zero cost.
-    """
-    spark = df.sparkSession
-    jrdd = df._jdf.rdd()
-    jrdd.localCheckpoint()
-    jrdd.count()
-    return DataFrame(
-        spark._jsparkSession.createDataFrame(jrdd, df._jdf.schema()), spark
-    )
 
 
 def connected_components(
@@ -82,97 +69,80 @@ def connected_components(
 
     ``all_nodes`` (one ``url`` column) optionally adds isolated docs,
     which come back as singleton clusters (cluster_id = own url).
+
+    Raises ``RuntimeError`` when the labels still move after
+    ``max_iter`` rounds: a round that lowers no label (the fixpoint
+    check) may run as round ``max_iter + 1``.
     """
     # undirected adjacency, both directions — materialized once so the
     # iteration never recomputes the (expensive) upstream edge plan.
-    # Plain localCheckpoint for the seeds: their preserved stats are a
+    # Plain checkpoint stats for the seeds: their preserved stats are a
     # CONSTANT base (upstream estimate bits) that only the iterated
-    # self-join doubles — the periodic _fence below caps that growth,
-    # and an RDD rebuild here would pay the Row round-trip over the
-    # full edge set on every CC invocation for nothing
-    sym = (
+    # self-join doubles — the periodic reset below caps that growth,
+    # and a rebuild here would pay the Row round-trip over the full
+    # edge set on every CC invocation for nothing
+    sym = fence(
         edges.select(F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
         .unionByName(
             edges.select(F.col("url_b").alias("src"), F.col("url_a").alias("dst"))
         )
-        .localCheckpoint(eager=True)
-    )
+    ).df
 
-    labels = (
+    labels = fence(
         sym.select(F.col("src").alias("url"))
         .distinct()
         .withColumn("label", F.col("url"))
-        .localCheckpoint(eager=True)
-    )
+    ).df
 
-    converged = False
-    for it in range(max_iter):
+    for it in range(max_iter + 1):
         # ONE join per round (r06): hop and jump fuse into the classic
         # label-doubling step L'(v) = min(L(v), min L(N(v)), L(L(v)))
         # by treating the label table itself as extra edges v -> L(v):
         # the neighbor-min over sym ∪ label-edges then includes
         # L(L(v)). Same fixpoint (component-min labels), still O(log
         # diameter) rounds, but the per-round cost drops from two
-        # joins + a convergence join to one join + a checkpoint-local
-        # scan — CC on a 1k-edge graph measured 10.3 s -> per-round
-        # fixed overhead was the entire cost at small edge counts.
+        # joins + a convergence join to one join — CC on a 1k-edge
+        # graph measured 10.3 s -> per-round fixed overhead was the
+        # entire cost at small edge counts.
         lab_edges = labels.select(
             F.col("url").alias("src"), F.col("label").alias("dst")
         )
         nbr_min = (
             sym.unionByName(lab_edges)
-            .join(labels.withColumnRenamed("url", "dst"), "dst")
+            .join(labels.select(F.col("url").alias("dst"), "label"), "dst")
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
             .withColumnRenamed("src", "url")
         )
-        round_fence = (
-            _fence
-            if it % _STATS_RESET_EVERY == _STATS_RESET_EVERY - 1
-            else lambda df: df.localCheckpoint(eager=True)
-        )
-        # labels only ever decrease, so carrying a per-row change flag
-        # into the fenced frame makes the convergence check a narrow
-        # filter+limit over the checkpoint — no join, no shuffle
-        new_labels = round_fence(
-            labels.join(nbr_min, "url", "left").select(
+        # labels only ever decrease; the fenced frame keeps each
+        # node's previous label so the checkpoint's own action counts
+        # the lowered ones
+        labels, _, moved = fence(
+            labels.select("url", F.col("label").alias("prev"))
+            .join(nbr_min, "url", "left")
+            .select(
                 "url",
                 F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
+                    F.col("prev"), F.coalesce("nbr_label", F.col("prev"))
                 ).alias("label"),
-                (
-                    F.coalesce("nbr_label", F.col("label")) < F.col("label")
-                ).alias("chg"),
-            )
+                "prev",
+            ),
+            lowered=F.count_if(F.col("label") < F.col("prev")),
         )
-        labels = new_labels.drop("chg")
-        changed = new_labels.where("chg").limit(1).count()
-        if changed == 0:
-            converged = True
+        if moved["lowered"] == 0:
             break
-
-    if not converged:
-        # labels move one hop per round; a dup chain with diameter >
-        # max_iter would exit the loop with inconsistent cluster ids,
-        # and even-iteration exits skip the changed-check (ADVICE r1) —
-        # spend one final job to verify before trusting the labels
-        final_changed = (
-            sym.join(labels.withColumnRenamed("url", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-            .join(labels.withColumnRenamed("url", "src"), "src")
-            .where(F.col("nbr_label") < F.col("label"))
-            .limit(1)
-            .count()
+        if it % _STATS_RESET_EVERY == _STATS_RESET_EVERY - 1:
+            labels = jvm_rows(labels)
+    else:
+        # a dup chain whose labels still move after max_iter rounds
+        # would exit with inconsistent cluster ids
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            "iterations (cluster diameter exceeds max_iter); "
+            "raise max_iter"
         )
-        if final_changed > 0:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations (cluster diameter exceeds max_iter); "
-                "raise max_iter"
-            )
 
-    out = labels.withColumnRenamed("label", "cluster_id")
+    out = labels.select("url", F.col("label").alias("cluster_id"))
     if all_nodes is not None:
         singletons = (
             all_nodes.select("url")

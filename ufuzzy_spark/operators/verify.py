@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from ufuzzy_spark.config import MatchConfig, PipelineConfig
+from ufuzzy_spark.session import broadcast_once
 
 VERIFY_SCHEMA = StructType(
     [
@@ -87,10 +88,10 @@ def make_verify_udf(pcfg: PipelineConfig):
     return verify_udf
 
 
-# Bytes per text row that a broadcast window attach builds: the url_a
-# and url_b sides are two relations unless the planner reuses one,
-# each ~1,043 B/row measured (url + the 2 x verify_window_chars window).
-WINDOW_ATTACH_ROW_BYTES = 2 * 1_100
+# Bytes per text row that a broadcast window attach builds: one
+# relation (url + the 2 x verify_window_chars window, ~1,043 B/row
+# measured) that both the url_a and url_b sides read.
+WINDOW_ATTACH_ROW_BYTES = 1_100
 
 
 def _attach_windows(
@@ -100,15 +101,15 @@ def _attach_windows(
     of norm_text, attached by two equi-joins on url_a, then url_b.
 
     Only the window is shuffled, never the full document. With
-    ``broadcast_texts`` the window table is broadcast, so the (much
-    larger) pair table is not shuffled twice by the attach joins.
+    ``broadcast_texts`` the window table is broadcast as one relation
+    both sides reuse, so the (much larger) pair table is not shuffled
+    twice by the attach joins.
     """
     win = 2 * pcfg.verify_window_chars
-    texts = normed.select(
-        "url", F.substring("norm_text", 1, win).alias("norm_win")
+    texts = broadcast_once(
+        normed.select("url", F.substring("norm_text", 1, win).alias("norm_win")),
+        broadcast_texts,
     )
-    if broadcast_texts:
-        texts = F.broadcast(texts)
     for side in ("a", "b"):
         pairs = pairs.join(
             texts.select(

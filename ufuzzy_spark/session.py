@@ -9,8 +9,9 @@ in operators/lsh.py is the guarantee, AQE the runtime bonus
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # The one broadcast budget. A data-dependent frame may be broadcast
@@ -32,7 +33,7 @@ def fits_broadcast(n_rows: int, row_bytes: int) -> bool:
     """Whether ``n_rows`` of ``row_bytes`` each fit the broadcast budget.
 
     ``row_bytes`` counts every relation the site builds from those rows
-    (two for an attach join whose sides are not reused)."""
+    (one for an attach join through ``broadcast_once``)."""
     return n_rows * row_bytes <= BCAST_MAX_BYTES
 
 
@@ -41,6 +42,55 @@ def broadcast_if_fits(
 ) -> DataFrame:
     """``df`` with a broadcast hint iff its ``n_rows`` fit the budget."""
     return F.broadcast(df) if fits_broadcast(n_rows, row_bytes) else df
+
+
+def jvm_rows(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a fresh leaf frame over its JVM row RDD (no
+    Python serialization; no job unless ``df``'s plan has an exchange,
+    whose stages AQE then runs at once).
+
+    The leaf carries the default statistics, not ``df``'s estimate, and
+    it is one RDD, so several aliases of it are one plan under AQE."""
+    spark = df.sparkSession
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(df._jdf.rdd(), df._jdf.schema()), spark
+    )
+
+
+def broadcast_once(df: DataFrame, fits: bool) -> DataFrame:
+    """``df`` hinted for broadcast as ONE built relation that every
+    alias of it reuses, iff ``fits`` (the caller's ``fits_broadcast``
+    for one copy); else ``df`` unchanged.
+
+    Under AQE two broadcasts of a persisted frame each wrap their own
+    table-cache stage, so an attach join's two sides build the relation
+    twice. Over ``jvm_rows(df)`` the second side is a ReusedExchange."""
+    return F.broadcast(jvm_rows(df)) if fits else df
+
+
+class Fenced(NamedTuple):
+    df: DataFrame
+    n: int
+    counts: dict
+
+
+def fence(df: DataFrame, **aggs: Column) -> Fenced:
+    """Materialize ``df`` as a lineage-truncated leaf and count it in
+    the SAME action: ``(frame, row count, {name: aggregate})``.
+
+    ``observe`` rides on the eager ``localCheckpoint``, so the row count
+    and each named aggregate over ``df``'s rows cost no job of their
+    own (measured over one shuffle: 2 jobs, vs 4 for checkpoint then
+    ``count()``). Observed aggregates may not be DISTINCT, and a
+    ``sum`` over no rows reads None (a ``count_if`` reads 0)."""
+    obs = Observation()
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("__rows"),
+        *(agg.alias(name) for name, agg in aggs.items()),
+    ).localCheckpoint(eager=True)
+    counts = dict(obs.get)
+    return Fenced(out, counts.pop("__rows"), counts)
 
 
 def get_spark(

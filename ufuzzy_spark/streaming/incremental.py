@@ -108,7 +108,7 @@ from ufuzzy_spark.operators.lsh import (
 from ufuzzy_spark.operators.minhash import banded_signatures
 from ufuzzy_spark.operators.normalize import normalize
 from ufuzzy_spark.operators.verify import WINDOW_ATTACH_ROW_BYTES, verify_pairs
-from ufuzzy_spark.session import broadcast_if_fits, fits_broadcast
+from ufuzzy_spark.session import broadcast_if_fits, fence, fits_broadcast
 
 _SIGS_SCHEMA = "content_hash long, band_hashes array<bigint>, simhash long"
 _VERDICTS_SCHEMA = "hash_lo long, hash_hi long, is_dup boolean"
@@ -145,24 +145,22 @@ _CONFIG_GUARD = "_PIPELINE_CONFIG.json"
 # plans plain and AQE picks the shape; that is also the correct plan
 # at that size. The key frames here are at most two urls wide, the
 # helper's default width.
-
-
-def _fence(df: DataFrame) -> DataFrame:
-    """Materialize a small/derived frame consumed by several actions.
-
-    localCheckpoint, not persist: the incremental frames chain deeply
-    and reference each other several times — persist() caches
-    execution but keeps the full LOGICAL plan, so the analyzer tree
-    doubles per stage (measured: driver-heap OOM by the ~14th fence at
-    600 docs). Checkpointing truncates each stage to a leaf; blocks are
-    small (bounded by the snapshot / touched-bucket size) and reclaimed
-    by the ContextCleaner once the frames go out of scope. Cumulative
-    STATE reads are deliberately never fenced — they are broadcast-
-    filtered column-pruned scans, re-scanned per use, which is the
-    shape that survives 100 TB (no executor-memory residency
-    proportional to corpus size).
-    """
-    return df.localCheckpoint(eager=True)
+#
+# Small/derived frames consumed by several actions are materialized
+# through ``session.fence`` (an eager localCheckpoint that counts its
+# own rows and any named aggregate in the same action — no fenced
+# frame is re-read just to size a broadcast or fill a stat).
+# localCheckpoint, not persist: the incremental frames chain deeply
+# and reference each other several times — persist() caches execution
+# but keeps the full LOGICAL plan, so the analyzer tree doubles per
+# stage (measured: driver-heap OOM by the ~14th fence at 600 docs).
+# Checkpointing truncates each stage to a leaf; blocks are small
+# (bounded by the snapshot / touched-bucket size) and reclaimed by the
+# ContextCleaner once the frames go out of scope. Cumulative STATE
+# reads are deliberately never fenced — they are broadcast-filtered
+# column-pruned scans, re-scanned per use, which is the shape that
+# survives 100 TB (no executor-memory residency proportional to
+# corpus size).
 
 
 def _check_config_guard(catalog: LocalParquetCatalog, pcfg: PipelineConfig):
@@ -255,16 +253,17 @@ def _dup_edges(pairs_h: DataFrame, verdicts: DataFrame, n_pairs: int) -> DataFra
 
 def _verify_misses(
     to_verify: DataFrame,
+    n_to_verify: int,
     texts: DataFrame,
     pcfg: PipelineConfig,
     stats_out: dict | None,
 ) -> DataFrame:
-    """Verify the memo-miss pairs (url_a, url_b, hash_lo, hash_hi)
+    """Verify the ``n_to_verify`` fenced memo-miss pairs (url_a, url_b,
+    hash_lo, hash_hi) — the count comes from the caller's fence —
     against ``texts`` (url, norm_text) -> fresh verdict rows
     (hash_lo, hash_hi, is_dup). Stored norm_text is already the verify
     window and verify_pairs re-windows identically, so verdicts match
     batch bit-for-bit."""
-    n_to_verify = to_verify.count()
     if stats_out is not None:
         stats_out["pairs_verified"] = n_to_verify
     ver_texts = texts.join(
@@ -274,7 +273,7 @@ def _verify_misses(
     )
     # hash keys ride THROUGH the verify UDF stage (verify_pairs
     # passthrough) — no million-row join-back to recover them
-    return _fence(
+    return fence(
         verify_pairs(
             to_verify.select("url_a", "url_b", "hash_lo", "hash_hi"),
             ver_texts,
@@ -282,7 +281,7 @@ def _verify_misses(
             # ver_texts is semi-join-bounded to <= 2*n_to_verify urls
             broadcast_texts=fits_broadcast(2 * n_to_verify, WINDOW_ATTACH_ROW_BYTES),
         ).select("hash_lo", "hash_hi", "is_dup")
-    )
+    ).df
 
 
 def _sum_pair_cnt(pair_cnt: DataFrame) -> DataFrame:
@@ -390,25 +389,24 @@ def _batch_recompute(
     # exact-hash stars: every member edges to its corpus-wide min-url
     # rep — the same connectivity and reps batch exact_dedup emits
     exact_edges, reps = exact_dedup(all_keys, hash_col="content_hash")
-    reps_all = _fence(reps)
-    n_reps = reps_all.count()
+    reps_all, n_reps, _ = fence(reps)
     posts = (
         _hash_postings(sigs_all, pcfg)
         .join(broadcast_if_fits(reps_all, n_reps), "content_hash")
         .select("url", "band_id", "band_hash")
     )
-    pair_counts = _fence(candidate_pair_counts(posts, pcfg))
+    pair_counts, n_pairs, _ = fence(candidate_pair_counts(posts, pcfg))
     if stats_out is not None:
         stats_out["mode"] = "batch_recompute"
-        stats_out["cand_pairs"] = pair_counts.count()
+        stats_out["cand_pairs"] = n_pairs
 
-    pairs_h = _fence(
+    pairs_h = fence(
         _attach_hashes(pair_counts.select("url_a", "url_b"), reps_all, n_reps)
-    )
-    to_verify = _fence(
+    ).df
+    to_verify, n_to_verify, _ = fence(
         pairs_h.join(old_verdicts, ["hash_lo", "hash_hi"], "left_anti")
     )
-    new_verdicts = _verify_misses(to_verify, texts, pcfg, stats_out)
+    new_verdicts = _verify_misses(to_verify, n_to_verify, texts, pcfg, stats_out)
     dup_edges = (
         pairs_h.join(
             old_verdicts.unionByName(new_verdicts), ["hash_lo", "hash_hi"]
@@ -546,25 +544,21 @@ def incremental_dedup(
 
     win = 2 * pcfg.verify_window_chars
 
-    new_normed = _fence(
+    new_normed, n_new, _ = fence(
         normalize(new_pages.where(F.col("lang").isin(*DEDUP_LANGS)), pcfg.match)
         .select("url", "warc_ts", "norm_text")
         .withColumn("content_hash", F.xxhash64("norm_text"))
     )
     new_urls = new_normed.select("url")
-    # one aggregation job: row count + intra-snapshot url uniqueness.
-    # url is the identity key every state table and CC node relies on —
-    # a snapshot carrying the same url twice would write two normed
-    # rows under one key and silently corrupt state, so refuse loudly
-    # (the cross-snapshot variant of this guard is below).
-    _c = new_normed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("url").alias("n_urls"),
-    ).first()
-    n_new = _c["n"]
-    if n_new != _c["n_urls"]:
+    # intra-snapshot url uniqueness. url is the identity key every
+    # state table and CC node relies on — a snapshot carrying the same
+    # url twice would write two normed rows under one key and silently
+    # corrupt state, so refuse loudly (the cross-snapshot variant of
+    # this guard is below). A separate action: observe rejects DISTINCT.
+    n_urls = new_normed.select(F.count_distinct("url")).first()[0]
+    if n_new != n_urls:
         raise ValueError(
-            f"incremental_dedup: snapshot contains {n_new - _c['n_urls']} "
+            f"incremental_dedup: snapshot contains {n_new - n_urls} "
             "duplicate url(s) within itself; urls must be unique across "
             "AND within snapshots (dedupe or version the urls upstream)"
         )
@@ -602,7 +596,8 @@ def incremental_dedup(
         # urls are the identity every state table and CC node keys on;
         # a re-crawled url (same url, any content, a later snapshot)
         # would live twice in `normed` and bridge its old and new
-        # content clusters — refuse loudly rather than corrupt state
+        # content clusters — refuse loudly rather than corrupt state.
+        # A separate action: a state scan, not a fence.
         n_dup_urls = (
             old_keys.select("url")
             .join(broadcast_if_fits(new_urls, n_new), "url", "left_semi")
@@ -629,18 +624,18 @@ def incremental_dedup(
         old_verdicts = spark.createDataFrame([], _VERDICTS_SCHEMA)
 
     # --- per-hash min url within this batch (rep candidates) -------- #
-    batch_min = _fence(
+    batch_min = fence(
         new_normed.groupBy("content_hash").agg(
             F.min("url").alias("new_min_url")
         )
-    )
+    ).df
 
     # --- prior reps for this batch's hashes; churn detection --------- #
     # rep(h) = min url ever ingested with hash h (exact_dedup's
     # orderBy("url") election) — min is associative, so the prior rep
     # is a broadcast-filtered scan of (url, content_hash) + a tiny agg
     if has_state:
-        old_reps_batch = _fence(
+        old_reps_batch = fence(
             old_keys.join(
                 broadcast_if_fits(batch_min.select("content_hash"), n_new),
                 "content_hash",
@@ -648,20 +643,23 @@ def incremental_dedup(
             )
             .groupBy("content_hash")
             .agg(F.min("url").alias("old_rep_url"))
-        )
+        ).df
     else:
         old_reps_batch = spark.createDataFrame([], _REPS_SCHEMA)
 
-    merged_reps = _fence(batch_min.join(old_reps_batch, "content_hash", "left"))
+    is_churned = F.col("old_rep_url").isNotNull() & (
+        F.col("new_min_url") < F.col("old_rep_url")
+    )
+    merged_reps, _, m = fence(
+        batch_min.join(old_reps_batch, "content_hash", "left"),
+        churned=F.count_if(is_churned),
+    )
     new_hashes = merged_reps.where(F.col("old_rep_url").isNull()).select(
         "content_hash"
     )
-    churned = merged_reps.where(
-        F.col("old_rep_url").isNotNull()
-        & (F.col("new_min_url") < F.col("old_rep_url"))
-    ).select("content_hash")
+    churned = merged_reps.where(is_churned).select("content_hash")
     if stats_out is not None:
-        stats_out["reps_churned"] = churned.count()
+        stats_out["reps_churned"] = m["churned"]
 
     # --- incremental stage 1: sign never-seen texts (Arrow UDF) ----- #
     first_per_hash = Window.partitionBy("content_hash").orderBy("url")
@@ -674,13 +672,13 @@ def incremental_dedup(
         # is text-addressed (memo survives representative churn)
         .select(F.col("content_hash").alias("url"), "norm_text")
     )
-    new_sigs = _fence(
+    new_sigs, n_sigs, _ = fence(
         banded_signatures(sig_inputs, pcfg).withColumnRenamed(
             "url", "content_hash"
         )
     )
     if stats_out is not None:
-        stats_out["new_sigs_computed"] = new_sigs.count()
+        stats_out["new_sigs_computed"] = n_sigs
 
     def persist(leg, new_verdicts, pair_cnt, clusters):
         memo_rows = {"sigs": new_sigs, "normed": new_slim, "verdicts": new_verdicts}
@@ -696,7 +694,7 @@ def incremental_dedup(
     # batch leg. The normed-state count is one column-pruned count —
     # cheap relative to either leg, and the decision input that
     # predicts the blast radius BEFORE paying for touched-bucket
-    # expansion.
+    # expansion (a separate action: a state scan, not a fence).
     if not has_state or (
         batch_cutover_frac is not None
         and n_new >= batch_cutover_frac * (n_new + old_normed.count())
@@ -721,14 +719,13 @@ def incremental_dedup(
     churned_sigs = old_sigs.join(
         broadcast_if_fits(churned, n_new), "content_hash", "left_semi"
     )
-    touched_keys = _fence(
+    touched_keys, n_touched, _ = fence(
         new_posts.select("band_id", "band_hash")
         .unionByName(
             _hash_postings(churned_sigs, pcfg).select("band_id", "band_hash")
         )
         .distinct()
     )
-    n_touched = touched_keys.count()
     if stats_out is not None:
         # the denominator (total distinct buckets) is an O(total)
         # distinct — callers wanting the fraction compute it post-hoc
@@ -738,19 +735,19 @@ def incremental_dedup(
 
     # member postings of touched buckets: broadcast-filtered narrow
     # explode of the sigs state — no shuffle reaches untouched keys
-    old_member_posts = _fence(
+    old_member_posts, n_old_posts, _ = fence(
         _hash_postings(old_sigs, pcfg).join(
             broadcast_if_fits(touched_keys, n_touched),
             ["band_id", "band_hash"],
             "left_semi",
         )
     )
-    n_member_posts = old_member_posts.count() + n_touched
+    n_member_posts = n_old_posts + n_touched
     all_member_posts = old_member_posts.unionByName(new_posts)
     member_hashes = all_member_posts.select("content_hash").distinct()
 
     # reps for member hashes, before and after this snapshot
-    old_reps_members = _fence(
+    old_reps_members = fence(
         old_keys.join(
             broadcast_if_fits(member_hashes, n_member_posts),
             "content_hash",
@@ -758,15 +755,15 @@ def incremental_dedup(
         )
         .groupBy("content_hash")
         .agg(F.min("url").alias("url"))
-    )
-    new_reps_members = _fence(
+    ).df
+    new_reps_members = fence(
         old_reps_members.withColumnRenamed("url", "old_url")
         .join(batch_min, "content_hash", "outer")
         .select(
             "content_hash",
             F.least("old_url", "new_min_url").alias("url"),
         )
-    )
+    ).df
 
     # --- touched-bucket pair-count delta ----------------------------- #
     # per-row frame: every (touched bucket, member hash) with its rep
@@ -840,7 +837,7 @@ def incremental_dedup(
         capped.select(F.col("new_url").alias("url"), "band_id", "band_hash"),
         pcfg,
     )
-    changed = _fence(
+    changed, n_changed, _ = fence(
         _sum_pair_cnt(
             _clique_delta(new_side, 1)
             .unionByName(_clique_delta(old_side, -1))
@@ -856,7 +853,6 @@ def incremental_dedup(
     # scanned under a broadcast filter of HASHED pair keys (8 bytes/key
     # instead of two url strings; hash false-positives only widen the
     # scan result and are dropped by the exact left join below)
-    n_changed = changed.count()
     if stats_out is not None:
         stats_out["cand_pairs"] = n_changed
     old_pair_cnt = catalog.read_all(spark, "pair_cnt")
@@ -872,42 +868,35 @@ def incremental_dedup(
         .groupBy("url_a", "url_b")
         .agg(F.sum("d").alias("prior"))
     )
-    judged = _fence(
+    # the refcount invariant guard and the added/removed stats are
+    # observed by `judged`'s own fence, not by an aggregation job
+    is_added = (F.col("prior") == 0) & (F.col("new_tot") > 0)
+    is_removed = (F.col("prior") > 0) & (F.col("new_tot") == 0)
+    judged, _, j = fence(
         changed.join(prior_tot, ["url_a", "url_b"], "left").select(
             "url_a",
             "url_b",
             F.coalesce("prior", F.lit(0)).alias("prior"),
             (F.coalesce("prior", F.lit(0)) + F.col("d")).alias("new_tot"),
-        )
+        ),
+        n_bad=F.count_if((F.col("prior") < 0) | (F.col("new_tot") < 0)),
+        n_added=F.count_if(is_added),
+        n_removed=F.count_if(is_removed),
     )
-    # one aggregation job over the fenced `judged` frame folds the
-    # refcount invariant guard and the added/removed stats (three
-    # driver actions in round 4 — serial latency at snapshot cadence)
-    _j = judged.agg(
-        F.sum(
-            F.when((F.col("prior") < 0) | (F.col("new_tot") < 0), 1).otherwise(0)
-        ).alias("n_bad"),
-        F.sum(
-            F.when((F.col("prior") == 0) & (F.col("new_tot") > 0), 1).otherwise(0)
-        ).alias("n_added"),
-        F.sum(
-            F.when((F.col("prior") > 0) & (F.col("new_tot") == 0), 1).otherwise(0)
-        ).alias("n_removed"),
-    ).first()
     # refcount invariant: counts are bucket multiplicities, never
     # negative — a violation means touched-bucket detection missed a
     # membership change, which would silently corrupt the pair set
-    if _j["n_bad"]:
+    if j["n_bad"]:
         raise RuntimeError(
-            f"incremental_dedup: {_j['n_bad']} pair refcount(s) went "
+            f"incremental_dedup: {j['n_bad']} pair refcount(s) went "
             "negative — touched-bucket bookkeeping is inconsistent with "
             "pair_cnt state"
         )
-    added = _fence(judged.where("prior = 0 and new_tot > 0").select("url_a", "url_b"))
-    removed = _fence(judged.where("prior > 0 and new_tot = 0").select("url_a", "url_b"))
-    n_removed = _j["n_removed"] or 0
+    added = fence(judged.where(is_added).select("url_a", "url_b")).df
+    removed = fence(judged.where(is_removed).select("url_a", "url_b")).df
+    n_removed = j["n_removed"]
     if stats_out is not None:
-        stats_out["pairs_added"] = _j["n_added"] or 0
+        stats_out["pairs_added"] = j["n_added"]
         stats_out["pairs_removed"] = n_removed
 
     # NOTE: the pair_cnt delta is deliberately NOT persisted here. An
@@ -921,19 +910,22 @@ def incremental_dedup(
     # --- incremental stage 2: verify only memo misses ---------------- #
     # added pairs live in touched buckets, so their urls are covered by
     # the small in-memory reps frame — no state scan to attach hashes
-    added_h = _fence(_attach_hashes(added, new_reps_members, n_member_posts))
-    n_added = added_h.count()
-    memo_hits = _fence(
+    added_h, n_added, _ = fence(
+        _attach_hashes(added, new_reps_members, n_member_posts)
+    )
+    memo_hits = fence(
         old_verdicts.join(
             broadcast_if_fits(added_h.select("hash_lo", "hash_hi"), n_added),
             ["hash_lo", "hash_hi"],
             "left_semi",
         )
-    )
-    to_verify = _fence(
+    ).df
+    to_verify, n_to_verify, _ = fence(
         added_h.join(memo_hits, ["hash_lo", "hash_hi"], "left_anti")
     )
     if stats_out is not None:
+        # a separate action: telling old urls from new ones takes a
+        # join with the snapshot's urls that no fence here has
         stats_out["old_x_old_reverified"] = (
             to_verify.join(
                 broadcast_if_fits(
@@ -951,7 +943,7 @@ def incremental_dedup(
             )
             .count()
         )
-    new_verdicts = _verify_misses(to_verify, texts, pcfg, stats_out)
+    new_verdicts = _verify_misses(to_verify, n_to_verify, texts, pcfg, stats_out)
 
     # verdicts for the added pairs = the (small) memo hits + this
     # snapshot's fresh verdicts — never a join against the full
@@ -969,10 +961,12 @@ def incremental_dedup(
     # removed pairs were present => verified at some earlier snapshot,
     # so their verdicts are guaranteed hits in a broadcast-filtered
     # scan of the verdict state
-    removed_h = _fence(
+    removed_h = fence(
         _attach_hashes(removed, old_reps_members, n_member_posts)
+    ).df
+    removed_dup, n_removed_dup, _ = fence(
+        _dup_edges(removed_h, old_verdicts, n_removed)
     )
-    removed_dup = _fence(_dup_edges(removed_h, old_verdicts, n_removed))
 
     # --- exact-dup edges for the new docs ---------------------------- #
     # same-content docs always share a component; edges to historical
@@ -995,12 +989,11 @@ def incremental_dedup(
     prior_clusters = catalog.read(spark, "clusters")
     prior_labels = prior_clusters.select("url", "cluster_id")
 
-    n_removed_dup = removed_dup.count()
     if n_removed_dup:
         # dissolve every component that relied on a retired pair:
         # its members become individual nodes and their CURRENT
         # edges are regathered from the refcount + verdict state
-        dissolved_labels = _fence(
+        dissolved_labels, n_dis_labels, _ = fence(
             prior_labels.join(
                 broadcast_if_fits(_endpoints(removed_dup), 2 * n_removed_dup),
                 "url",
@@ -1009,26 +1002,24 @@ def incremental_dedup(
             .select("cluster_id")
             .distinct()
         )
-        n_dis_labels = dissolved_labels.count()
         # one retired pair incident to a mega-component (boilerplate
         # / spam cluster with millions of members) makes `dissolved`
         # arbitrarily large — every use below goes through the
         # counted broadcast guard, same as the rest of the function
-        dissolved = _fence(
+        dissolved, n_dissolved, _ = fence(
             prior_labels.join(
                 broadcast_if_fits(dissolved_labels, n_dis_labels),
                 "cluster_id",
                 "left_semi",
             ).select("url")
         )
-        n_dissolved = dissolved.count()
         # live dup edges incident to dissolved members: the
         # post-snapshot logical counts are the persisted state plus
         # THIS snapshot's (not-yet-persisted) delta, unioned in
         # memory — the delta only hits disk in _persist so a failed
         # ingest leaves no partial state
         pc_all = old_pair_cnt.unionByName(changed.select("url_a", "url_b", "d"))
-        inc_pairs = _fence(
+        inc_pairs, n_inc, _ = fence(
             pc_all.join(
                 broadcast_if_fits(
                     dissolved.withColumnRenamed("url", "url_a"), n_dissolved
@@ -1051,7 +1042,6 @@ def incremental_dedup(
             .where("tot > 0")
             .select("url_a", "url_b")
         )
-        n_inc = inc_pairs.count()
         # a state scan of (url, content_hash) filtered by the pairs'
         # urls — broadcast only when 2 * n_inc bounds them under the
         # cap (a retired pair incident to a mega-component can make
@@ -1059,7 +1049,7 @@ def incremental_dedup(
         inc_map = all_keys.join(
             broadcast_if_fits(_endpoints(inc_pairs), 2 * n_inc), "url", "left_semi"
         )
-        inc_pairs_h = _fence(_attach_hashes(inc_pairs, inc_map, 2 * n_inc))
+        inc_pairs_h = fence(_attach_hashes(inc_pairs, inc_map, 2 * n_inc)).df
         m_dup_edges = _dup_edges(
             inc_pairs_h, old_verdicts.unionByName(new_verdicts), n_inc
         )
@@ -1094,18 +1084,16 @@ def incremental_dedup(
     # themselves; every other endpoint collapses to its prior
     # component label. Labels are min-member urls, so the small
     # graph's min-label CC emits exactly the batch labels.
-    own_nodes = _fence(
+    own_nodes, n_own, _ = fence(
         dissolved.unionByName(new_urls).distinct().withColumn(
             "own", F.lit(True)
         )
     )
-    n_own = own_nodes.count()
-    ep_urls = _fence(_endpoints(graph_edges_raw))
-    n_eps = ep_urls.count()
+    ep_urls, n_eps, _ = fence(_endpoints(graph_edges_raw))
     ep_labels = prior_labels.join(
         broadcast_if_fits(ep_urls, n_eps), "url", "left_semi"
     )
-    ep_map = _fence(
+    ep_map = fence(
         ep_urls.join(own_nodes, "url", "left")
         .join(ep_labels, "url", "left")
         .select(
@@ -1115,7 +1103,7 @@ def incremental_dedup(
             .otherwise(F.coalesce("cluster_id", F.col("url")))
             .alias("node"),
         )
-    )
+    ).df
     graph_edges = (
         graph_edges_raw.join(
             ep_map.select(
@@ -1139,7 +1127,7 @@ def incremental_dedup(
         .unionByName(ep_map.select(F.col("node").alias("url")))
         .distinct()
     )
-    cc_small = _fence(connected_components(graph_edges, all_nodes=small_nodes))
+    cc_small = fence(connected_components(graph_edges, all_nodes=small_nodes)).df
 
     # affected prior components: dissolved ones, plus every intact
     # component that appeared as a supernode (it may have merged,
@@ -1150,9 +1138,9 @@ def incremental_dedup(
         .select(F.col("node").alias("cluster_id"))
         .distinct()
     )
-    affected_labels = _fence(
+    affected_labels = fence(
         supernode_labels.unionByName(dissolved_labels).distinct()
-    )
+    ).df
 
     own_rows = cc_small.join(
         broadcast_if_fits(own_nodes.select("url"), n_own), "url", "left_semi"
@@ -1180,8 +1168,7 @@ def incremental_dedup(
             "left_anti",
         )
     )
-    affected_members = _fence(own_rows.unionByName(intact_rows))
-    n_aff = affected_members.count()
+    affected_members, n_aff, _ = fence(own_rows.unionByName(intact_rows))
     aff_slim = slim_all.join(
         broadcast_if_fits(affected_members.select("url"), n_aff),
         "url",
