@@ -1565,29 +1565,151 @@ def _chain_graph(spark):
     return df, nodes, want
 
 
-def _cc_labels(spark, **kwargs):
+def _force_loop(monkeypatch):
+    """Route every CC call through the distributed label-doubling
+    loop: no edge set fits a budget below zero."""
+    import ufuzzy_spark.session as session
+
+    monkeypatch.setattr(session, "BCAST_MAX_BYTES", -1)
+
+
+def _cc_rows(edges, nodes=None, **kwargs):
+    """CC output as a multiset of (url, cluster_id) rows."""
+    from collections import Counter
+
     from ufuzzy_spark.operators.components import connected_components
 
+    out = connected_components(edges, all_nodes=nodes, **kwargs)
+    return Counter(tuple(r) for r in out.collect())
+
+
+def _cc_both_paths(monkeypatch, edges, nodes=None):
+    """(in-memory finish rows, distributed loop rows) of one graph."""
+    finish = _cc_rows(edges, nodes)
+    with monkeypatch.context() as m:
+        _force_loop(m)
+        loop = _cc_rows(edges, nodes)
+    return finish, loop
+
+
+def _cc_labels(spark, **kwargs):
     df, nodes, _ = _chain_graph(spark)
-    out = connected_components(df, all_nodes=nodes, **kwargs)
-    return {(r.url, r.cluster_id) for r in out.collect()}
+    return set(_cc_rows(df, nodes, **kwargs))
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     """Near-dup CHAINS (template pages under successive edits) produce
     high-diameter components — the sf0.1 documents table holds one of
     diameter >= 11, which cost 12 one-hop rounds before pointer
-    jumping (round 5). A 60-node path converges only through the jump
-    step (one-hop propagation would need 59 > max_iter rounds and
-    raise); labels must still be the component-min url exactly."""
-    assert _cc_labels(spark) == _chain_graph(spark)[2]
+    jumping (round 5). On the loop a 60-node path converges only
+    through the jump step (one-hop propagation would need 59 >
+    max_iter rounds and raise); the in-memory finish and the loop
+    must both give the component-min url exactly."""
+    df, nodes, want = _chain_graph(spark)
+    finish, loop = _cc_both_paths(monkeypatch, df, nodes)
+    assert finish == loop
+    assert set(finish) == want and max(finish.values()) == 1
 
 
-def test_connected_components_non_convergence_raises(spark):
+def test_min_labels_matches_sequential_union_find():
+    """The finish's vectorized union-find against a plain sequential
+    one rooted at the smaller code, on seeded random graphs with
+    self-loops, repeated edges and isolated codes."""
+    import numpy as np
+
+    from ufuzzy_spark.operators.components import _min_labels
+
+    def sequential(a, b, n):
+        parent = list(range(n))
+
+        def root(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for x, y in zip(a, b):
+            rx, ry = root(x), root(y)
+            parent[max(rx, ry)] = min(rx, ry)
+        return [root(x) for x in range(n)]
+
+    rng = np.random.default_rng(5)
+    for _ in range(200):
+        n = int(rng.integers(1, 120))
+        m = int(rng.integers(0, 2 * n))
+        a, b = rng.integers(0, n, m), rng.integers(0, n, m)
+        assert _min_labels(a, b, n).tolist() == sequential(a, b, n)
+
+
+def test_connected_components_paths_agree_on_non_ascii_urls(spark, monkeypatch):
+    """The finish orders urls by Arrow's UTF-8 byte comparison, the
+    loop by Spark's: both are code-point order, which UTF-16 order
+    (Java's String.compareTo) is not — a supplementary-plane char
+    sorts below U+FF21 in UTF-16 and above it here."""
+    import random
+
+    rng = random.Random(29)
+    alphabet = ["a", "Z", "0", "~", "é", "ß", "中", "\uff21", "\U0001f600"]
+    urls = sorted(
+        {
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 4)))
+            for _ in range(400)
+        }
+    )
+    edges = spark.createDataFrame(
+        [(rng.choice(urls), rng.choice(urls)) for _ in range(250)],
+        "url_a string, url_b string",
+    )
+    nodes = spark.createDataFrame([(u,) for u in urls], "url string")
+    finish, loop = _cc_both_paths(monkeypatch, edges, nodes)
+    assert finish == loop
+    assert sum(finish.values()) == len(urls)
+    # several multi-node components, so labels are really compared
+    assert len({c for u, c in finish if u != c}) > 5
+
+
+def test_connected_components_paths_agree_on_long_ids(spark, monkeypatch):
+    """dup_clusters and embedding_near_dup label long ids: signed
+    numeric order, values past 2**53 kept exact."""
+    import random
+
+    rng = random.Random(31)
+    ids = sorted({rng.choice([-1, 1]) * rng.randrange(1 << 62) for _ in range(300)})
+    edges = spark.createDataFrame(
+        [(rng.choice(ids), rng.choice(ids)) for _ in range(260)],
+        "url_a long, url_b long",
+    )
+    nodes = spark.createDataFrame([(i,) for i in ids], "url long")
+    finish, loop = _cc_both_paths(monkeypatch, edges, nodes)
+    assert finish == loop
+    assert sum(finish.values()) == len(ids)
+    assert len({c for u, c in finish if u != c}) > 5
+
+
+def test_connected_components_null_endpoint(spark, monkeypatch):
+    """A null endpoint is one (null, null) node that connects nothing
+    on both paths; the finish must not read its missing code as the
+    last node's."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", None), (None, "zz"), ("c", "d"), ("e", None)],
+        "url_a string, url_b string",
+    )
+    nodes = spark.createDataFrame([("a",), ("y",), (None,)], "url string")
+    for n in (None, nodes):
+        finish, loop = _cc_both_paths(monkeypatch, edges, n)
+        assert finish == loop
+    assert set(_cc_rows(edges)) == {
+        ("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"),
+        ("e", "e"), ("zz", "zz"), (None, None),
+    }
+
+
+def test_connected_components_non_convergence_raises(spark, monkeypatch):
     """Labels still moving after max_iter rounds raise instead of
-    returning inconsistent cluster ids. max_iter counts the rounds
-    that lower labels: 7 suffice for the 60-node path (the round that
-    confirms the fixpoint may run as round 8), 6 do not."""
+    returning inconsistent cluster ids. max_iter counts the loop's
+    rounds that lower labels: 7 suffice for the 60-node path (the
+    round that confirms the fixpoint may run as round 8), 6 do not.
+    The in-memory finish runs no rounds, so the loop is forced."""
+    _force_loop(monkeypatch)
     want = _chain_graph(spark)[2]
     with pytest.raises(RuntimeError, match="did not converge in 6"):
         _cc_labels(spark, max_iter=6)
@@ -1613,30 +1735,40 @@ def _count_jobs(spark, group: str, fn):
 # it plus one job; job counts barely move where walls swing. Bounds
 # only go down: a change that lowers a count tightens its bound, and
 # one that raises it says why in CHANGES.md. Measured (local[8], 8
-# shuffle partitions, 4 cores): CC 63 in every run, 79 with a
-# limit(1).count() probe per round; the delta ingest 165 or 167 (8
-# runs; 201-203 when its fenced frames and CC rounds were counted by
-# separate actions).
-CC_CHAIN_JOBS = 64
-DELTA_INGEST_JOBS = 168
+# shuffle partitions, 4 cores): CC over the chain graph 4 in every
+# run on the in-memory finish, 63 on the forced loop (79 with a
+# limit(1).count() probe per round); the seed-13 delta ingest 140 in
+# 12 of 12 runs at the default heap, once its reps joins plan their
+# broadcasts statically (165 or 167 before the finish, 142 or 144 with
+# AQE converting those joins at run time).
+CC_CHAIN_JOBS = 5
+CC_LOOP_CHAIN_JOBS = 64
+DELTA_INGEST_JOBS = 141
 
 
-def test_job_budget_cc_and_delta_ingest(spark, tmp_path):
-    """Every fence counts itself (session.fence) and CC's convergence
-    rides on its round fence, so neither path pays a job to count a
-    frame it just materialized: CC over the chain graph (8 rounds) and
-    the seed-13 delta-leg absorption stay within their job budgets."""
+def test_job_budget_cc_and_delta_ingest(spark, tmp_path, monkeypatch):
+    """CC over a graph that fits the broadcast budget is one edge
+    fence, one collect and the output's own job, not a loop of fenced
+    rounds; the forced loop's convergence rides on its round fences
+    (8 rounds on the chain graph); the seed-13 delta-leg absorption,
+    whose CCs take the finish, stays within its budget."""
     from ufuzzy_spark.operators.components import connected_components
 
     df, nodes, want = _chain_graph(spark)
-    got = []
-    cc_jobs = _count_jobs(
-        spark,
-        "budget-cc",
-        lambda: got.extend(connected_components(df, all_nodes=nodes).collect()),
-    )
-    assert {(r.url, r.cluster_id) for r in got} == want
-    assert cc_jobs <= CC_CHAIN_JOBS, cc_jobs
+    for budget, force in ((CC_CHAIN_JOBS, False), (CC_LOOP_CHAIN_JOBS, True)):
+        got = []
+        with monkeypatch.context() as m:
+            if force:
+                _force_loop(m)
+            cc_jobs = _count_jobs(
+                spark,
+                f"budget-cc-{force}",
+                lambda: got.extend(
+                    connected_components(df, all_nodes=nodes).collect()
+                ),
+            )
+        assert {(r.url, r.cluster_id) for r in got} == want
+        assert cc_jobs <= budget, (force, cc_jobs)
 
     jobs: list[int] = []
     _, mode = _ingest_seed13(spark, tmp_path / "budget", None, jobs)
@@ -1644,7 +1776,28 @@ def test_job_budget_cc_and_delta_ingest(spark, tmp_path):
     assert jobs[1] <= DELTA_INGEST_JOBS, jobs
 
 
-def test_connected_components_deep_iteration_stays_linear(spark):
+def test_cc_finish_collect_fits_max_result_size(spark):
+    """The largest edge set the finish collects (the broadcast budget
+    over CC_EDGE_BYTES) stays under spark.driver.maxResultSize, at the
+    62-char url width CC_EDGE_BYTES was measured on."""
+    from ufuzzy_spark import session
+    from ufuzzy_spark.operators.components import CC_EDGE_BYTES
+
+    url = "https://www.example-%05d.com/news/2024/article-%09d.html"
+    n = 4096
+    edges = spark.range(n).select(
+        F.format_string(url, F.col("id") % 99991, F.col("id")).alias("url_a"),
+        F.format_string(url, F.col("id") % 7, F.col("id") + 1).alias("url_b"),
+    )
+    per_edge = edges.toArrow().nbytes / n
+    limit = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g"
+    )
+    max_edges = session.BCAST_MAX_BYTES // CC_EDGE_BYTES
+    assert max_edges * per_edge < limit, (max_edges, per_edge, limit)
+
+
+def test_connected_components_deep_iteration_stays_linear(spark, monkeypatch):
     """Regression pin for the localCheckpoint origin-stats blowup:
     checkpointed self-join loops DOUBLE the preserved sizeInBytes
     BigInteger's bit-length per round, which turned rounds 14-19 into
@@ -1654,11 +1807,13 @@ def test_connected_components_deep_iteration_stays_linear(spark):
     three _STATS_RESET_EVERY fences and reach the formerly-explosive
     regime. Healthy wall is ~linear in rounds (< 2 min here); a
     regression re-introduces minutes-per-round growth and trips the
-    bound long before max_iter."""
+    bound long before max_iter. A 300k-edge path fits the in-memory
+    finish, so the loop is forced."""
     import time
 
     from ufuzzy_spark.operators.components import connected_components
 
+    _force_loop(monkeypatch)
     n = 300_000
     ids = F.format_string("p%07d", F.col("id"))
     edges = (

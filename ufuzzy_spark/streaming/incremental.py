@@ -747,7 +747,7 @@ def incremental_dedup(
     member_hashes = all_member_posts.select("content_hash").distinct()
 
     # reps for member hashes, before and after this snapshot
-    old_reps_members = fence(
+    old_reps_members, n_old_reps, _ = fence(
         old_keys.join(
             broadcast_if_fits(member_hashes, n_member_posts),
             "content_hash",
@@ -755,25 +755,34 @@ def incremental_dedup(
         )
         .groupBy("content_hash")
         .agg(F.min("url").alias("url"))
-    ).df
-    new_reps_members = fence(
+    )
+    new_reps_members, n_new_reps, _ = fence(
         old_reps_members.withColumnRenamed("url", "old_url")
         .join(batch_min, "content_hash", "outer")
         .select(
             "content_hash",
             F.least("old_url", "new_min_url").alias("url"),
         )
-    ).df
+    )
 
     # --- touched-bucket pair-count delta ----------------------------- #
     # per-row frame: every (touched bucket, member hash) with its rep
-    # url before (null for new hashes) and after this snapshot
+    # url before (null for new hashes) and after this snapshot. Both
+    # reps frames are hinted from their fence counts so the broadcast
+    # is planned up front: left to AQE's run-time conversion, whether
+    # the member-posts shuffle was already submitted varied the job
+    # count from identical input
     mem = all_member_posts.join(
-        old_reps_members.withColumnRenamed("url", "old_url"),
+        broadcast_if_fits(
+            old_reps_members.withColumnRenamed("url", "old_url"), n_old_reps
+        ),
         "content_hash",
         "left",
     ).join(
-        new_reps_members.withColumnRenamed("url", "new_url"), "content_hash"
+        broadcast_if_fits(
+            new_reps_members.withColumnRenamed("url", "new_url"), n_new_reps
+        ),
+        "content_hash",
     )
 
     # split touched buckets by whether the cap machinery can fire.
@@ -911,7 +920,7 @@ def incremental_dedup(
     # added pairs live in touched buckets, so their urls are covered by
     # the small in-memory reps frame — no state scan to attach hashes
     added_h, n_added, _ = fence(
-        _attach_hashes(added, new_reps_members, n_member_posts)
+        _attach_hashes(added, new_reps_members, n_new_reps)
     )
     memo_hits = fence(
         old_verdicts.join(
@@ -962,7 +971,7 @@ def incremental_dedup(
     # so their verdicts are guaranteed hits in a broadcast-filtered
     # scan of the verdict state
     removed_h = fence(
-        _attach_hashes(removed, old_reps_members, n_member_posts)
+        _attach_hashes(removed, old_reps_members, n_old_reps)
     ).df
     removed_dup, n_removed_dup, _ = fence(
         _dup_edges(removed_h, old_verdicts, n_removed)
