@@ -1,12 +1,25 @@
 // Differential-test harness: runs the ACTUAL reference implementation
-// (/root/reference/dist/uFuzzy.cjs, read-only) on cases piped via stdin
-// and prints JSON results. Used only by tests to pin the Python oracle
-// to real reference behavior — no reference code is copied.
+// on cases piped via stdin and prints JSON results. Used only by tests
+// to pin the Python oracle to real reference behavior — no reference
+// code is copied.
 //
 // stdin:  JSON [{haystack, needle, opts?, outOfOrder?, infoThresh?}, ...]
+//         or [{collate: [[a, b], ...]}, ...]
 // stdout: JSON [{idxs, info?, order?}, ...]   (info without fn fields)
+//         or [{cmp: [sign, ...]}, ...]
+//
+// Collate cases need only node: they are answered by node's own
+// Intl.Collator. Search cases need the reference build, REF_BUILD (the
+// read-only uFuzzy checkout next to this repo, reference/dist/
+// uFuzzy.cjs), loaded on the first search case. A missing build fails
+// the whole run (MODULE_NOT_FOUND, exit 1) on purpose: reported per case
+// as {error} it would read as a reference crash, which the fuzz test
+// skips, so the run would pass having compared nothing.
 
-const uFuzzy = require('/root/reference/dist/uFuzzy.cjs');
+const path = require('path');
+
+const REF_BUILD = path.join(__dirname, '..', '..', 'reference', 'dist', 'uFuzzy.cjs');
+let uFuzzy = null;
 
 const plainCmp = (a, b) => (a > b ? 1 : a < b ? -1 : 0);
 
@@ -22,6 +35,8 @@ process.stdin.on('end', () => {
       const coll = new Intl.Collator('en', { numeric: true, sensitivity: 'base' });
       return { cmp: c.collate.map(([a, b]) => Math.sign(coll.compare(a, b))) };
     }
+    // outside the try below: a missing build must end the run
+    uFuzzy = uFuzzy || require(REF_BUILD);
     const opts = Object.assign({}, c.opts || {});
     if (opts.compare === 'plain') opts.compare = plainCmp;
     if (opts.interIns === 'inf') opts.interIns = Infinity;

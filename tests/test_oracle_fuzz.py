@@ -5,6 +5,12 @@ mutations, random quoting, and random negations — the adversarial
 input space for prep_query's regex translation. Every case compares
 idxs + full info counters + ranges + order against the actual
 reference implementation.
+
+Skipped when node is unavailable, and also where the reference build
+(REF_BUILD: reference/dist/uFuzzy.cjs in the read-only uFuzzy checkout
+next to this repo) is absent: every test here runs the reference's
+search. The Intl.Collator check in test_oracle_parity.py needs only
+node.
 """
 
 import json
@@ -21,7 +27,14 @@ from ufuzzy_spark.oracle import UFuzzyOracle
 
 NODE = shutil.which("node")
 HARNESS = Path(__file__).parent / "js_ref_harness.cjs"
-pytestmark = pytest.mark.skipif(NODE is None, reason="node not available")
+# the file the harness loads for search cases
+REF_BUILD = Path(__file__).resolve().parents[2] / "reference" / "dist" / "uFuzzy.cjs"
+pytestmark = [
+    pytest.mark.skipif(NODE is None, reason="node not available"),
+    pytest.mark.skipif(
+        not REF_BUILD.is_file(), reason=f"reference build absent: {REF_BUILD}"
+    ),
+]
 
 INFO_KEYS = (
     "idx start chars cases terms interIns intraIns "

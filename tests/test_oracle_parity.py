@@ -1,12 +1,19 @@
 """Differential test: Python oracle vs the ACTUAL reference (node).
 
-Runs /root/reference/dist/uFuzzy.cjs through tests/js_ref_harness.cjs
-on seeded random corpora across config space and asserts identical
-idxs / info counters / ranges / order. This pins the oracle far more
-tightly than hand-written cases; the Spark verify UDF is in turn
-pinned to the oracle.
+Runs the reference build (REF_BUILD: reference/dist/uFuzzy.cjs in the
+read-only uFuzzy checkout next to this repo) through
+tests/js_ref_harness.cjs on seeded random corpora across config space
+and asserts identical idxs / info counters / ranges / order. This pins
+the oracle far more tightly than hand-written cases; the Spark verify
+UDF is in turn pinned to the oracle.
 
-Skipped automatically when node is unavailable.
+Every test is skipped when node is unavailable. The three reference
+sweeps (test_parity_full_sweep, test_parity_random_fuzz_corpora,
+test_parity_unicode_flag_and_letters_alias) also need REF_BUILD and are
+skipped where it is absent. test_collation_matches_intl_collator and
+test_intra_filt_hook_discards_matches carry only the node condition:
+the collator check needs nothing but node, since the harness answers
+collate cases with node's own Intl.Collator.
 """
 
 import json
@@ -23,8 +30,13 @@ from ufuzzy_spark.oracle import UFuzzyOracle
 
 NODE = shutil.which("node")
 HARNESS = Path(__file__).parent / "js_ref_harness.cjs"
+# the file the harness loads for search cases
+REF_BUILD = Path(__file__).resolve().parents[2] / "reference" / "dist" / "uFuzzy.cjs"
 
 pytestmark = pytest.mark.skipif(NODE is None, reason="node not available")
+needs_ref_build = pytest.mark.skipif(
+    not REF_BUILD.is_file(), reason=f"reference build absent: {REF_BUILD}"
+)
 
 WORDS = (
     "cat catalog category cart chapter outcast test testing contest "
@@ -148,6 +160,7 @@ def parity_results():
     return cases, ref
 
 
+@needs_ref_build
 def test_parity_full_sweep(parity_results):
     cases, ref = parity_results
     import functools
@@ -189,6 +202,7 @@ def test_parity_full_sweep(parity_results):
     )
 
 
+@needs_ref_build
 def test_parity_random_fuzz_corpora():
     """Random mutated-phrase corpora — the dedup-shaped workload."""
     rng = random.Random(7)
@@ -246,6 +260,7 @@ UNI_WORDS = (
 ).split()
 
 
+@needs_ref_build
 def test_parity_unicode_flag_and_letters_alias():
     """opts.unicode=true (uFuzzy.mjs:23-24,167: the /u regex flag) and
     the `letters` alias for `alpha` (uFuzzy.mjs:152). Python strings
