@@ -1740,18 +1740,25 @@ def _count_jobs(spark, group: str, fn):
 # limit(1).count() probe per round); the seed-13 delta ingest 140 in
 # 12 of 12 runs at the default heap, once its reps joins plan their
 # broadcasts statically (165 or 167 before the finish, 142 or 144 with
-# AQE converting those joins at run time).
+# AQE converting those joins at run time); the seed-13 first ingest 43
+# in 12 of 12 runs once the election keys' join plans its broadcast
+# statically (44 or 45 with AQE converting it); run_pipeline over the
+# 3k-page fixture corpus plus a noop write of its clusters 18 in 12 of
+# 12 runs (28 with a persist() and count() beside each stage fence).
 CC_CHAIN_JOBS = 5
 CC_LOOP_CHAIN_JOBS = 64
 DELTA_INGEST_JOBS = 141
+FIRST_INGEST_JOBS = 44
+PIPELINE_JOBS = 19
 
 
 def test_job_budget_cc_and_delta_ingest(spark, tmp_path, monkeypatch):
     """CC over a graph that fits the broadcast budget is one edge
     fence, one collect and the output's own job, not a loop of fenced
     rounds; the forced loop's convergence rides on its round fences
-    (8 rounds on the chain graph); the seed-13 delta-leg absorption,
-    whose CCs take the finish, stays within its budget."""
+    (8 rounds on the chain graph); the seed-13 first ingest (the batch
+    leg) and delta-leg absorption, whose CCs take the finish, stay
+    within their budgets."""
     from ufuzzy_spark.operators.components import connected_components
 
     df, nodes, want = _chain_graph(spark)
@@ -1773,7 +1780,58 @@ def test_job_budget_cc_and_delta_ingest(spark, tmp_path, monkeypatch):
     jobs: list[int] = []
     _, mode = _ingest_seed13(spark, tmp_path / "budget", None, jobs)
     assert mode == "delta"
+    assert jobs[0] <= FIRST_INGEST_JOBS, jobs
     assert jobs[1] <= DELTA_INGEST_JOBS, jobs
+
+
+def _pipeline_op(spark, pages):
+    """run_pipeline plus a noop write of its clusters -> the result."""
+    from ufuzzy_spark.pipeline import run_pipeline
+
+    res = run_pipeline(spark, pages)
+    res.clusters.write.format("noop").mode("overwrite").save()
+    return res
+
+
+def test_job_budget_pipeline(spark, fixture_dir):
+    """The batch path marks each stage boundary once: a second fence
+    (a persist() and count() beside the stage's own) costs jobs past
+    the budget."""
+    pages = spark.read.parquet(str(fixture_dir / "pages.parquet"))
+    held = []
+    jobs = _count_jobs(
+        spark, "budget-pipeline", lambda: held.append(_pipeline_op(spark, pages))
+    )
+    held[0].unpersist()
+    assert jobs <= PIPELINE_JOBS, jobs
+
+
+def test_pipeline_unpersist_releases_stage_fences(spark):
+    """unpersist() frees every stage fence's checkpoint blocks (a
+    checkpoint leaf's RDD, which DataFrame.unpersist leaves alone), so
+    repeated runs in one session do not pile them up."""
+    from fixtures.gen import gen_corpus
+
+    sc = spark.sparkContext
+
+    def persistent() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    pages = spark.createDataFrame(gen_corpus(300, seed=5, label_pairs=False)[0])
+    before = persistent()
+    fenced: set[int] = set()
+    counts = []
+    for _ in range(3):
+        res = _pipeline_op(spark, pages)
+        fenced |= {
+            df._jdf.queryExecution().logical().rdd().id()
+            for df in res._runner._fenced
+        }
+        res.unpersist()
+        counts.append(len(persistent() - before))
+    assert len(fenced) == 3 * 5  # five stages per run
+    assert not fenced & persistent()
+    assert counts[2] <= counts[0], counts
 
 
 def test_cc_finish_collect_fits_max_result_size(spark):

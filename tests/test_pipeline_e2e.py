@@ -94,6 +94,24 @@ def test_excluded_lang_rows_not_clustered(spark, fixture_dir, result):
     assert result.clusters.join(xx, "url").count() == 0
 
 
+def test_extraction_invariant_holds_on_fixture_pages(spark, fixture_dir):
+    """input_hint rule: the text extracted from each page's html is
+    byte-identical to its text column. A page whose text differs by one
+    character, or whose html is null, is a violation."""
+    from ufuzzy_spark.operators.normalize import extraction_invariant_violations
+
+    pages = spark.read.parquet(str(fixture_dir / "pages.parquet"))
+    assert pages.count() == 3000
+    assert extraction_invariant_violations(pages).count() == 0
+
+    a, b = pages.select("url", "html", "text").limit(2).collect()
+    bad = spark.createDataFrame(
+        [(a.url, None, a.text), (b.url, b.html, b.text + ".")],
+        "url string, html binary, text string",
+    )
+    assert extraction_invariant_violations(bad).count() == 2
+
+
 def test_verify_udf_matches_oracle_labels(spark, fixture_dir):
     """The Spark verify UDF must reproduce PairVerifier labels exactly
     on the golden pairs (same code, but exercises the Arrow path)."""

@@ -1450,8 +1450,8 @@ def q_resume_lineage(spark, sf_dir):
                 lambda: _near_dup_edges(spark, sf_dir)[0],
             )
 
-        stages(StageRunner(spark, tmp, "md5parity-v1", resume=True))
-        second = StageRunner(spark, tmp, "md5parity-v1", resume=True)
+        stages(StageRunner(spark, tmp, "md5parity-v1"))
+        second = StageRunner(spark, tmp, "md5parity-v1")
         stages(second)
         rows = [
             (name, int(m["rows"]), bool(m["resumed"]))

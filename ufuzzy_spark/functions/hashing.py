@@ -43,14 +43,6 @@ def splitmix64(x: np.ndarray, out: np.ndarray | None = None) -> np.ndarray:
         np.seterr(**old)
 
 
-def perm_seeds(num_perm: int, seed: int = 42) -> np.ndarray:
-    """Deterministic per-permutation seeds for the MinHash family."""
-    rng = np.random.RandomState(seed)
-    lo = rng.randint(0, 2**32, size=num_perm, dtype=np.uint64)
-    hi = rng.randint(0, 2**32, size=num_perm, dtype=np.uint64)
-    return (hi << np.uint64(32)) | lo
-
-
 def kgram_hashes(text: str, k: int) -> np.ndarray:
     """Unique rolling k-gram content hashes of a UTF-8 string.
 

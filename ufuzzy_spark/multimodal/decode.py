@@ -25,7 +25,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -763,16 +762,3 @@ def decode_images(
             )
 
     return df.mapInPandas(run, IMAGE_META_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (url, frame_idx) to
-    decode. The explode is native; actual frame extraction is the
-    stubbed decode above. Demonstrates the fan-out schema."""
-    n_frames = (F.length("payload") / 1024).cast("int")  # stub duration proxy
-    return df.select(
-        "url",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(n_frames, F.lit(1)) - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )

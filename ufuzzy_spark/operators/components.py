@@ -52,7 +52,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ufuzzy_spark.session import fence, fits_broadcast, jvm_rows
+from ufuzzy_spark.session import (
+    broadcast_if_fits,
+    fence,
+    fits_broadcast,
+    jvm_rows,
+    release,
+)
 
 # Driver bytes one edge costs the in-memory finish at its peak: the
 # Python process's peak RSS over the finish (collected Arrow edges,
@@ -108,6 +114,7 @@ def connected_components(
     edges, n_edges, _ = fence(edges.select("url_a", "url_b"))
     if fits_broadcast(n_edges, CC_EDGE_BYTES):
         out = _label_in_memory(edges)
+        release(edges)  # collected; the labels are a driver-built frame
     else:
         out = _label_doubling(edges, max_iter)
     if all_nodes is not None:
@@ -260,7 +267,10 @@ def _label_doubling(edges: DataFrame, max_iter: int) -> DataFrame:
 
 
 def elect_canonical(
-    clusters: DataFrame, normed: DataFrame, n_chars_col: str | None = None
+    clusters: DataFrame,
+    normed: DataFrame,
+    n_chars_col: str | None = None,
+    n_docs: int | None = None,
 ) -> DataFrame:
     """Per-cluster canonical doc via the reference rank-comparator keys.
 
@@ -273,17 +283,21 @@ def elect_canonical(
     (streaming/incremental.py stores it at ingest and keeps only a
     text window — length() over the window would elect differently
     than batch); default computes length(norm_text) here.
+
+    ``n_docs``, ``normed``'s row count when known, plans the election
+    keys' join as a broadcast up front if they fit the budget; left to
+    AQE, the conversion races the clusters' shuffle and the job count
+    varies from run to run.
     """
     from pyspark.sql import Window
 
     length_expr = (
         F.length("norm_text") if n_chars_col is None else F.col(n_chars_col)
     )
-    enriched = clusters.join(
-        normed.select("url", length_expr.alias("n_chars"), "warc_ts"),
-        "url",
-        "left",
-    )
+    keys = normed.select("url", length_expr.alias("n_chars"), "warc_ts")
+    if n_docs is not None:
+        keys = broadcast_if_fits(keys, n_docs)
+    enriched = clusters.join(keys, "url", "left")
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("n_chars"), F.asc("warc_ts"), F.asc("url")
     )

@@ -67,5 +67,6 @@ def normalize(pages: DataFrame, cfg: MatchConfig | None = None) -> DataFrame:
 
 
 def extraction_invariant_violations(pages: DataFrame) -> DataFrame:
-    """Rows where extract_text(html) != text — must be empty (pytest pin)."""
-    return pages.where(extract_text(F.col("html")) != F.col("text"))
+    """Rows whose extract_text(html) is not byte-identical to text (a
+    null on one side only counts) — must be empty (pytest pin)."""
+    return pages.where(~extract_text(F.col("html")).eqNullSafe(F.col("text")))

@@ -10,8 +10,28 @@ uFuzzy's filter -> info -> sort lifecycle (SURVEY.md §3).
           --canonical election(window)--> final table
 
 Each stage is a separately runnable DataFrame -> DataFrame function
-(the reference's own à-la-carte architecture, README.md:139-181),
-which is what makes per-stage checkpointing and resume possible.
+(the reference's own à-la-carte architecture, README.md:139-181).
+``run_pipeline`` fences the stages that several consumers read, with
+one ``StageRunner.materialize`` call each, whether or not a checkpoint
+dir is given (with one they are also resumable):
+
+- ``normed``: read by exact dedup, both verify text attaches, the CC
+  nodes and the election, three of them as concurrent subplans of the
+  verify job (over a lazy cache they recomputed normalize a varying
+  number of times: 312..568 s run to run on 1M docs at local[16]).
+  Its row count picks the verify and election join plans.
+- ``exact_edges``: one branch of the CC edge union.
+- ``signatures``: the salted two-phase bucket cap reads the postings
+  several times; unfenced, the signature UDF reruns up to 4x.
+- ``candidate_pairs``: capped-bucket expansion UNION star overflow,
+  both derived from the same bucket window.
+- ``verified_pairs``: the other branch of the CC edge union, which
+  reads both branches in one job; unfenced, the whole signatures ->
+  LSH -> verify chain ran twice.
+- ``substring_pairs``, when asked for: a separate output table.
+
+``reps`` (read only by signatures) and the clusters (the caller's
+output) are left lazy.
 """
 
 from __future__ import annotations
@@ -25,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ufuzzy_spark.config import DEDUP_LANGS, PipelineConfig
+from ufuzzy_spark.lineage import StageRunner
 from ufuzzy_spark.operators.components import connected_components, elect_canonical
 from ufuzzy_spark.operators.dedup import exact_dedup
 from ufuzzy_spark.operators.lsh import candidate_pairs, postings_from_band_hashes
@@ -41,19 +62,15 @@ class PipelineResult:
     candidate_pairs: DataFrame
     substring_pairs: DataFrame | None = None  # long exact-substring dupes
     metrics: dict = field(default_factory=dict)
-    _persisted: list = field(default_factory=list, repr=False)
+    _runner: StageRunner | None = field(default=None, repr=False)
 
     def unpersist(self) -> None:
-        """Release executor storage held by the run's persist() fences.
-        Call after consuming the result DataFrames — repeated
-        run_pipeline calls in one session otherwise accumulate cached
-        blocks (VERDICT r1 #4)."""
-        for df in self._persisted:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._persisted.clear()
+        """Release the storage of the run's stage fences. Read the
+        result frames first: they are unreadable afterwards. Repeated
+        run_pipeline calls in one session otherwise accumulate
+        checkpoint blocks (VERDICT r1 #4)."""
+        if self._runner is not None:
+            self._runner.release()
 
 
 def run_pipeline(
@@ -61,14 +78,11 @@ def run_pipeline(
     pages: DataFrame,
     pcfg: PipelineConfig | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
     include_substring_pairs: bool = False,
     use_simhash_candidates: bool = False,
 ) -> PipelineResult:
-    from ufuzzy_spark.lineage import StageRunner
-
     pcfg = pcfg or PipelineConfig()
-    runner = StageRunner(spark, checkpoint_dir, pcfg.config_hash(), resume)
+    runner = StageRunner(spark, checkpoint_dir, pcfg.config_hash())
     metrics: dict = {"config_hash": pcfg.config_hash(), "stages": runner.metrics}
 
     # 1. normalize (narrow) — only dedup-eligible languages proceed.
@@ -84,31 +98,19 @@ def run_pipeline(
         pages.where(F.col("lang").isin(*DEDUP_LANGS))
         .repartition(target_parts, "url")
     )
-    # slim projection persisted once: normalize feeds 5 consumers
-    # (exact dedup, signatures, verify texts x2, CC nodes, election) —
-    # without this the narrow normalize plan recomputes per consumer
-    persisted: list = []
-    normed = (
-        normalize(in_scope, pcfg.match)
-        .select("url", "warc_ts", "norm_text")
-        .persist()
+    normed, n_normed, _ = runner.materialize(
+        "normed",
+        lambda: normalize(in_scope, pcfg.match).select(
+            "url", "warc_ts", "norm_text"
+        ),
     )
-    persisted.append(normed)
-    # FORCE the cache now: the verify job reads normed through THREE
-    # concurrent subplans (exact-dedup chain, verify texts x2); tasks
-    # racing past an unpopulated persist recompute the
-    # normalize+repartition of the whole corpus a nondeterministic
-    # number of times — measured as 312s..568s run-to-run variance on
-    # the 1M corpus at local[16]. One cheap count() pins it — and its
-    # value is the data-dependent guard for broadcasting the verify
-    # windows (r06: the two text-attach joins otherwise shuffle the
-    # pair table twice).
-    bcast_texts = fits_broadcast(normed.count(), WINDOW_ATTACH_ROW_BYTES)
+    # r06: unbroadcast, the two text-attach joins shuffle the pair
+    # table twice
+    bcast_texts = fits_broadcast(n_normed, WINDOW_ATTACH_ROW_BYTES)
 
     # 2. exact-hash pre-dedup: strips identical-content mass before LSH
-    exact_edges_l, reps_l = exact_dedup(normed)
-    reps = runner.materialize("reps", lambda: reps_l)
-    exact_edges = runner.materialize("exact_edges", lambda: exact_edges_l)
+    exact_edges_l, reps = exact_dedup(normed)
+    exact_edges = runner.materialize("exact_edges", lambda: exact_edges_l).df
 
     # 3. signatures over representatives only (narrow, Arrow UDFs) —
     # band hashes are folded INSIDE the UDF (minhash.banded_signatures)
@@ -119,15 +121,7 @@ def run_pipeline(
         lambda: banded_signatures(reps, pcfg).select(
             "url", "band_hashes", "simhash"
         ),
-    )
-    if checkpoint_dir is None:
-        # FORCE: the salted two-phase cap reads the posting plan
-        # multiple times — unfenced, the signature Arrow UDF recomputes
-        # up to 4x inside the verify job (the dominant stage cost at
-        # 1M docs)
-        sigs = sigs.persist()
-        sigs.count()
-        persisted.append(sigs)
+    ).df
 
     # 4. LSH candidates (one shuffle + distinct). Optional SimHash
     # Hamming-ball postings union in as a recall backstop (the band
@@ -140,43 +134,22 @@ def run_pipeline(
             buckets = buckets.unionByName(simhash_chunk_buckets(sigs, pcfg))
         return candidate_pairs(buckets, pcfg)
 
-    cands = runner.materialize("candidate_pairs", _cands)
-    if checkpoint_dir is None:
-        # FORCE: pairs = capped-bucket expansion UNION star overflow —
-        # both branches re-derive the bucket window from sigs
-        cands = cands.persist()
-        cands.count()
-        persisted.append(cands)
+    cands = runner.materialize("candidate_pairs", _cands).df
 
     # 5. bounded-edit verification (precision pass)
     verified = runner.materialize(
         "verified_pairs",
         lambda: verify_pairs(cands, normed, pcfg, broadcast_texts=bcast_texts),
-    )
-    if checkpoint_dir is None:
-        # FORCE the cache before CC: the symmetrized edge union reads
-        # this plan twice in one job, and concurrent union branches
-        # race past an unmaterialized persist — without the count()
-        # the whole signatures->LSH->verify chain computes twice
-        verified = verified.persist()
-        verified.count()
-        persisted.append(verified)
-    dup_edges = verified.where("is_dup").select("url_a", "url_b")
+    ).df
 
-    # 6. connected components over exact + verified edges — exact star
-    # edges are cheap rows; materialize them too so the union doesn't
-    # recompute the content-hash window per branch
-    if checkpoint_dir is None:
-        exact_edges = exact_edges.persist()
-        exact_edges.count()
-        persisted.append(exact_edges)
-    all_edges = exact_edges.unionByName(dup_edges)
-    cc_labels = connected_components(all_edges, all_nodes=normed.select("url"))
+    # 6. connected components over exact + verified edges
+    dup_edges = verified.where("is_dup").select("url_a", "url_b")
+    cc_labels = connected_components(
+        exact_edges.unionByName(dup_edges), all_nodes=normed.select("url")
+    )
 
     # 7. canonical election
-    clusters = runner.materialize(
-        "clusters", lambda: elect_canonical(cc_labels, normed)
-    )
+    clusters = elect_canonical(cc_labels, normed, n_docs=n_normed)
 
     # 8. optional long-exact-substring branch: a SEPARATE output table
     # (shared boilerplate chunks are not near-dup clusters; SURVEY §3)
@@ -186,12 +159,10 @@ def run_pipeline(
 
         sub_pairs = runner.materialize(
             "substring_pairs", lambda: substring_pairs(normed, pcfg)
-        )
+        ).df
 
     runner.write_metrics_table()
-    return PipelineResult(
-        clusters, verified, cands, sub_pairs, metrics, _persisted=persisted
-    )
+    return PipelineResult(clusters, verified, cands, sub_pairs, metrics, runner)
 
 
 def main() -> None:

@@ -93,6 +93,13 @@ def fence(df: DataFrame, **aggs: Column) -> Fenced:
     return Fenced(out, counts.pop("__rows"), counts)
 
 
+def release(df: DataFrame) -> None:
+    """Free a ``fence``d frame's checkpoint blocks, which
+    ``df.unpersist()`` leaves alone: they belong to the RDD under the
+    leaf, not to a cached plan. ``df`` is unreadable afterwards."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def get_spark(
     app_name: str = "ufuzzy_spark",
     master: str | None = None,

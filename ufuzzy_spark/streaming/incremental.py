@@ -366,8 +366,10 @@ def _batch_recompute(
     all_keys: DataFrame,
     texts: DataFrame,
     slim_all: DataFrame,
+    n_docs: int,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Batch-over-state leg -> (pair_cnt, new_verdicts, clusters).
+    """Batch-over-state leg -> (pair_cnt, new_verdicts, clusters);
+    ``n_docs`` is ``slim_all``'s row count.
 
     Takes the first ingest, and any snapshot so large that the
     touched-bucket delta machinery would cost MORE than recomputing:
@@ -417,7 +419,9 @@ def _batch_recompute(
     labels = connected_components(
         exact_edges.unionByName(dup_edges), all_nodes=all_keys.select("url")
     )
-    clusters = elect_canonical(labels, slim_all, n_chars_col="n_chars")
+    clusters = elect_canonical(
+        labels, slim_all, n_chars_col="n_chars", n_docs=n_docs
+    )
     pair_cnt = pair_counts.select("url_a", "url_b", F.col("cnt").alias("d"))
     return pair_cnt, new_verdicts, clusters
 
@@ -695,13 +699,15 @@ def incremental_dedup(
     # cheap relative to either leg, and the decision input that
     # predicts the blast radius BEFORE paying for touched-bucket
     # expansion (a separate action: a state scan, not a fence).
+    n_docs = n_new
+    if has_state and batch_cutover_frac is not None:
+        n_docs += old_normed.count()
     if not has_state or (
-        batch_cutover_frac is not None
-        and n_new >= batch_cutover_frac * (n_new + old_normed.count())
+        batch_cutover_frac is not None and n_new >= batch_cutover_frac * n_docs
     ):
         pair_cnt, new_verdicts, clusters = _batch_recompute(
             pcfg, stats_out, old_sigs.unionByName(new_sigs), old_verdicts,
-            all_keys, texts, slim_all,
+            all_keys, texts, slim_all, n_docs,
         )
         if stats_out is not None and not has_state:
             stats_out.update(
